@@ -483,13 +483,16 @@ def main():
     # r14: merge with the committed quiet-host floors so a fresh
     # checkout's first run (no bench_out.json yet) still detects a slow
     # start — see merged_sentinel_floors
+    _floors_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                                "bench_sentinel_floors.json")
     try:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "bench_sentinel_floors.json")) as fh:
+        with open(_floors_path) as fh:
             _prev_floors = merged_sentinel_floors(_prev_floors,
                                                   json.load(fh))
-    except Exception:
+    except FileNotFoundError:
         pass
+    except Exception as e:
+        print(f"warning: cannot load {_floors_path}: {e}", file=sys.stderr)
     _prev_floor = _prev_floors.get(str(CPUS))
 
     def _sentinel_time():

@@ -165,7 +165,7 @@ def _shingles_sql(toks_sql: str, k: int) -> str:
     filters empties), so concat's NULL propagation can't differ from
     array_join's NULL-skipping; the produced strings are byte-identical
     (proven exceptAll = 0 at 50k docs) and the shingle stage measured
-    1.15 -> 0.59 s at 50k docs (tools/exp_shingle_ab.py). The
+    1.15 -> 0.59 s at 50k docs (exp_shingle_ab.py, commit 2ac3e73). The
     greatest(.., 0) guard was redundant under the size >= k branch."""
     gram = ", ' ', ".join(
         f"element_at({toks_sql}, i + {j + 1})" for j in range(k))
@@ -232,9 +232,9 @@ def _ordered_pairs(df: DataFrame, *cols: str) -> DataFrame:
     executing the join chain twice — the double-execution the r13 form
     was built to avoid), and the sort is distributed. Both branches
     yield the same total order (sort keys are unique per row; proven
-    ordered-collect-equal at sf1, tools/exp_sort_tail_r14.py, where
-    the two also time within noise of each other: best 4.03 vs
-    4.42 s). At bench scales the input sits far below the threshold —
+    ordered-collect-equal at sf1, exp_sort_tail_r14.py in commit
+    6f0d2dd, where the two also time within noise of each other: best
+    4.03 vs 4.42 s). At bench scales the input sits far below the threshold —
     plan and timing byte-identical to r13."""
     if _input_bytes(df) > _ORDERED_PAIRS_INPUT_MAX_BYTES:
         return df.localCheckpoint(eager=False).orderBy(*cols)
@@ -480,10 +480,10 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     # candidate set is IDENTICAL by construction (proven exceptAll = 0
     # at 50k docs) while skipping num_hashes long->string casts plus
     # `bands` array_joins and xxhash64 calls per document — candidate
-    # stage 1.63 -> 1.52 s at 50k docs (tools/exp_slice_band.py). The
-    # wider shuffle key (8*rows_per_band vs 8 bytes) is bounded by
-    # bands*rows = num_hashes longs per doc, the same as the signature
-    # itself.
+    # stage 1.63 -> 1.52 s at 50k docs (exp_slice_band.py, commit
+    # 2ac3e73). The wider shuffle key (8*rows_per_band vs 8 bytes) is
+    # bounded by bands*rows = num_hashes longs per doc, the same as the
+    # signature itself.
     band_sql = (
         f"transform(sequence(0, {bands - 1}), b -> struct(b AS band, "
         f"slice(sig, b * {rows_per_band} + 1, {rows_per_band}) AS bh))")

@@ -37,9 +37,11 @@ import os
 import re
 import threading
 import time
+import traceback
 import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-from typing import Any
+from typing import Any, Callable, NamedTuple
+from urllib.parse import parse_qs, urlparse
 
 from druid_spark import __version__
 from druid_spark.scheduler import (
@@ -1036,9 +1038,103 @@ class _Overlord:
         return 200, {"id": sid}
 
 
-# --------------------------------------------------------------- handler
+# ------------------------------------------------------------- routing
+# One table serves every endpoint. Each _Handler method below declares
+# with @_route the (method, path) it answers and the resources it must
+# be authorized for — the analog of the reference's JAX-RS @Path plus
+# @ResourceFilters (StateResourceFilter, DatasourceResourceFilter).
+# _Handler._dispatch matches, authenticates, authorizes and
+# request-logs every route in one place.
+class _Route(NamedTuple):
+    method: str
+    template: str
+    pattern: re.Pattern
+    auth: Any
+    handler: Callable
+    log: Any
+
+
+_ROUTES: list[_Route] = []
+
+_STATE_READ = ((STATE, "STATE", READ),)
+_STATE_WRITE = ((STATE, "STATE", WRITE),)
+_DS_READ = ((DATASOURCE, "{ds}", READ),)
+_DS_WRITE = ((DATASOURCE, "{ds}", WRITE),)
+
+
+def _route(method: str, template: str, auth: Any = (), log=None):
+    """Register the decorated _Handler method for `method template`.
+
+    template: the path, with `{name}` matching one path segment and
+    `{name:a|b}` one of the listed alternatives; the segments are
+    passed to the handler positionally, in order.
+    auth: None serves the route unauthenticated; otherwise the request
+    authenticates and is authorized for each (type, name, action) of a
+    tuple whose names may cite path segments as `{name}`, or of
+    `auth(handler)` for the routes whose resources come from the body
+    — those routes require a JSON-object body (400 otherwise).
+    log: (kind, detail(body)) for the request log; other routes log as
+    kind "http" with the method and path."""
+    pattern = re.compile(re.sub(
+        r"\{(\w+)(?::([^}]+))?\}",
+        lambda m: f"(?P<{m[1]}>{m[2] or '[^/]+'})", template))
+
+    def register(fn):
+        _ROUTES.append(_Route(method, template, pattern, auth, fn, log))
+        return fn
+    return register
+
+
+def _match(method: str, path: str):
+    """First route answering `method path` (declaration order)."""
+    for r in _ROUTES:
+        if r.method == method and (m := r.pattern.fullmatch(path)):
+            return r, m
+    return None, None
+
+
+def _sql_auth(field: str):
+    """SQL statements name-scan the catalog: WRITE on INSERT/REPLACE
+    targets, EXTERNAL on EXTERN, STATE on sys.*."""
+    return lambda h: sql_resources(h.engine.catalog.tables(),
+                                   h._body.get(field) or "")
+
+
+# Overlord task and supervisor submissions are datasource WRITEs
+def _task_auth(h):
+    b = h._body
+    ds = (b.get("dataSource")
+          or b.get("spec", {}).get("dataSchema", {}).get("dataSource")
+          or b.get("dataSchema", {}).get("dataSource"))
+    return [(DATASOURCE, ds, WRITE)] if ds else _STATE_WRITE
+
+
+def _supervisor_auth(h):
+    try:
+        ds = h._body.get("spec", h._body)["dataSchema"]["dataSource"]
+        return [(DATASOURCE, ds, WRITE)]
+    except (KeyError, TypeError):
+        return _STATE_WRITE
+
+
+# basic-security administration: BasicAuthenticatorResource /
+# BasicAuthorizerResource analogs (extensions-core/druid-basic-security/
+# .../endpoint/). The {db} segment (authenticatorName/authorizerName)
+# is accepted verbatim — this single-process server has one instance
+# per kind serving every name.
+_SEC = "/druid-ext/basic-security/{kind:authentication|authorization}/db/{db}"
+_AUTHN = "/druid-ext/basic-security/{kind:authentication}/db/{db}"
+_AUTHZ = "/druid-ext/basic-security/{kind:authorization}/db/{db}"
+_TASK_LISTS = {"tasks": None, "runningTasks": "running",
+               "completeTasks": "complete", "waitingTasks": "waiting",
+               "pendingTasks": "pending"}
+
+
+# ---------------------------------------------------------------- handler
 class _Handler(BaseHTTPRequestHandler):
     protocol_version = "HTTP/1.1"
+    # the ThreadingHTTPServer, carrying what DruidHttpServer attaches
+    server: Any
 
     # silence per-request stderr logging
     def log_message(self, fmt, *args):  # noqa: D102
@@ -1046,13 +1142,87 @@ class _Handler(BaseHTTPRequestHandler):
 
     @property
     def engine(self):
-        return self.server.engine  # type: ignore[attr-defined]
+        return self.server.engine
+
+    def do_GET(self):  # noqa: N802
+        self._dispatch("GET")
+
+    def do_POST(self):  # noqa: N802
+        self._dispatch("POST")
+
+    def do_DELETE(self):  # noqa: N802
+        self._dispatch("DELETE")
+
+    def _dispatch(self, method: str) -> None:
+        """Serve one request and request-log it (RequestLogger
+        contract: time, remote, identity, query id, success, query/time
+        ms). An exception before any response bytes becomes a 500 in
+        the QueryException shape; after them (a stream already under
+        way) the connection closes without the completeness marker."""
+        t0 = time.time()
+        url = urlparse(self.path)
+        self._path = url.path.rstrip("/")
+        self._query = parse_qs(url.query, keep_blank_values=True)
+        self._ident = self._last_status = self._last_qid = None
+        self._log = ("http", f"{method} {self._path}")
+        error = None
+        try:
+            self._serve(method)
+        except Exception as e:
+            traceback.print_exc()
+            error = type(e).__name__
+            if self._last_status is None:
+                self._send_json(500, error_body("Unknown exception", e))
+            else:
+                self.close_connection = True
+        status = 500 if error else (self._last_status or 200)
+        kind, detail = self._log
+        self.server.request_logger.log(
+            kind=kind, detail=detail, status=status, identity=self._ident,
+            remote=self.client_address[0], queryId=self._last_qid,
+            success=status < 400, error=error,
+            query_time_ms=int((time.time() - t0) * 1000))
+
+    def _serve(self, method: str) -> None:
+        """Match the route, decode the body, authenticate and authorize
+        the route's resources, then run its handler."""
+        route, m = _match(method, self._path)
+        try:
+            n = int(self.headers.get("Content-Length") or 0)
+            self._body = json.loads(self.rfile.read(n) or b"{}")
+            if route is not None and callable(route.auth) and \
+                    not isinstance(self._body, dict):
+                raise TypeError("expected a JSON object, got "
+                                + type(self._body).__name__)
+        except (ValueError, TypeError) as e:
+            return self._send_json(400, error_body("Unable to parse query",
+                                                   e))
+        if route is None:
+            if self._auth() is not None:
+                self._error(404, "Not found", self.path)
+            return
+        if route.log is not None:
+            self._log = (route.log[0], route.log[1](self._body))
+        if route.auth is not None:
+            res = (route.auth(self) if callable(route.auth) else
+                   [(t, name.format(**m.groupdict()), a)
+                    for t, name, a in route.auth])
+            self._ident = self._auth(res)
+            if self._ident is None:
+                return
+        route.handler(self, *m.groups())
 
     # ------------------------------------------------------- security
     def _allowed(self, ident: str, rtype: str, name: str,
                  action: str) -> bool:
         authz = getattr(self.server, "authorizer", None)
         return authz is None or authz.authorize(ident, rtype, name, action)
+
+    def _readable(self, names) -> list[str]:
+        """The datasources the caller may READ (AuthorizationUtils
+        filterAuthorizedResources)."""
+        return [t for t in names
+                if self._allowed(self._ident, DATASOURCE, t, READ)]
 
     def _auth(self, resources=()) -> str | None:
         """Authenticate the request and authorize each (type, name,
@@ -1077,38 +1247,234 @@ class _Handler(BaseHTTPRequestHandler):
             return None
         for rtype, name, action in resources:
             if not self._allowed(ident, rtype, name, action):
-                self._send_json(403, {
-                    "error": "Forbidden",
-                    "errorMessage": f"Unauthorized access to "
-                                    f"[{rtype}:{name}] for action "
-                                    f"[{action}]",
-                    "errorClass": None, "host": None})
+                self._error(403, "Forbidden",
+                            f"Unauthorized access to [{rtype}:{name}] "
+                            f"for action [{action}]")
                 return None
         return ident
 
-    def _sql_res(self, text: str):
-        return sql_resources(self.engine.catalog.tables(), text or "")
+    # -------------------------------------------------------- replies
+    def send_response(self, code, message=None):  # noqa: D102
+        self._last_status = code
+        super().send_response(code, message)
 
-    # ------------------------------------- basic-security administration
-    # BasicAuthenticatorResource / BasicAuthorizerResource analogs
-    # (extensions-core/druid-basic-security/.../endpoint/): runtime
-    # user/role/permission management over HTTP against the wired
-    # authenticator/authorizer. The {authenticatorName}/{authorizerName}
-    # path segment is accepted verbatim — this single-process server has
-    # one instance per kind serving every name. Every mutation is
-    # audit-logged (AuditManager analog).
-    _SEC_RE = re.compile(
-        r"^/druid-ext/basic-security/(authentication|authorization)"
-        r"/db/[^/]+(/.*)?$")
+    def _send(self, status: int, body: bytes,
+              ctype: str = "application/json", qid: str | None = None) -> None:
+        if qid:
+            self._last_qid = qid
+        self.send_response(status)
+        self.send_header("Content-Type", ctype)
+        self.send_header("Content-Length", str(len(body)))
+        if qid:
+            self.send_header("X-Druid-Query-Id", qid)
+        self.end_headers()
+        self.wfile.write(body)
 
-    def _sec_backend(self, kind: str):
-        """The configured instance, or None when it doesn't support
-        runtime administration (e.g. the allow-all defaults)."""
-        if kind == "authentication":
-            be = getattr(self.server, "authenticator", None)
-            return be if hasattr(be, "create_user") else None
-        be = getattr(self.server, "authorizer", None)
-        return be if hasattr(be, "create_role") else None
+    def _send_json(self, status: int, obj: Any, qid: str | None = None) -> None:
+        self._send(status, json.dumps(obj).encode(), qid=qid)
+
+    def _error(self, status: int, error: str, msg: str) -> None:
+        """Reply in the QueryException JSON shape."""
+        self._send_json(status, {"error": error, "errorMessage": msg,
+                                 "errorClass": None, "host": None})
+
+    def _arg(self, name: str, default: str | None = None) -> str | None:
+        """First non-blank value of query parameter `name`."""
+        return (self._query.get(name) or [default])[0] or default
+
+    def _audit(self, key: str, type_: str, payload) -> None:
+        self.server.audit.record(key=key, type_=type_, payload=payload,
+                                 author=self._ident,
+                                 ip=self.client_address[0])
+
+    # ------------------------------------------------ queries and SQL
+    @_route("POST", "/druid/v2", lambda h: native_query_resources(h._body),
+            log=("native", lambda b: str(b.get("dataSource"))))
+    def _native_query(self):
+        self._native(self._body)
+
+    @_route("POST", "/druid/v2/sql", _sql_auth("query"),
+            log=("sql", lambda b: str(b.get("query") or "")[:500]))
+    def _sql_query(self):
+        self._sql(self._body)
+
+    @_route("POST", "/druid/v2/sql/avatica", _sql_auth("sql"))
+    def _avatica(self):
+        self._send_json(*self.server.avatica.handle(self._body,
+                                                    identity=self._ident))
+
+    @_route("DELETE", "/druid/v2/{qid}")
+    @_route("DELETE", "/druid/v2/sql/{qid}")
+    def _cancel(self, qid):
+        # QueryResource.cancelQuery / SqlResource.cancelQuery: 202 if
+        # the id was running, 404 otherwise
+        if self.server.scheduler.cancel(qid):
+            self._send(202, b"")
+        else:
+            self._error(404, "Not found", qid)
+
+    @_route("POST", "/druid/v2/sql/{api:statements|task}",
+            _sql_auth("query"))
+    def _submit_statement(self, api):
+        # /sql/task is the MSQ entry (sql/.../sql/http/SqlTaskResource
+        # analog, SURVEY §3.3): same async machinery, task-shaped
+        # response. INSERT/REPLACE route through the engine's SQL
+        # ingestion writer like any engine.sql() call.
+        text = self._body.get("query")
+        if not text:
+            return self._error(400, "SQL parse failed", "missing 'query'")
+        out = self.server.statements.submit(
+            text, self._body.get("parameters"), identity=self._ident)
+        if api == "task":
+            out = {"taskId": out["queryId"], "state": out["state"]}
+        self._send_json(202, out)
+
+    def _foreign_statement(self, qid: str) -> bool:
+        """Statements are owner-scoped (SqlStatementResource): another
+        authenticated identity may not read or cancel one given only
+        its queryId. Replies 403 for a foreign statement."""
+        if not self.server.statements.owner_mismatch(qid, self._ident):
+            return False
+        self._error(403, "Forbidden",
+                    f"statement {qid} belongs to another identity")
+        return True
+
+    @_route("GET", "/druid/v2/sql/statements/{qid}")
+    def _statement_status(self, qid):
+        if self._foreign_statement(qid):
+            return
+        out = self.server.statements.status(qid)
+        if out is None:
+            self._error(404, "Not found", qid)
+        else:
+            self._send_json(200, out)
+
+    @_route("GET", "/druid/v2/sql/statements/{qid}/results")
+    def _statement_results(self, qid):
+        if self._foreign_statement(qid):
+            return
+        try:
+            page = int(self._arg("page", "0"))
+            if page < 0:
+                raise ValueError(page)
+        except ValueError:
+            return self._error(400, "Invalid page",
+                               str(self._query.get("page")))
+        self._send_json(*self.server.statements.results(qid, page=page))
+
+    @_route("DELETE", "/druid/v2/sql/statements/{qid}")
+    def _cancel_statement(self, qid):
+        if self._foreign_statement(qid):
+            return
+        if self.server.statements.cancel(qid):
+            self._send(202, b"")
+        else:
+            self._error(404, "Not found", qid)
+
+    @_route("GET", "/druid/v2/sql/task/enabled")
+    def _sql_task_enabled(self):
+        # SqlTaskResource — the console's MSQ capability probe
+        self._send_json(200, {"enabled": True})
+
+    @_route("GET", "/druid/v2/sql/engines")
+    def _sql_engines(self):
+        # the console's engine census (no dart here)
+        self._send_json(200, {"engines": [
+            {"name": "broker"}, {"name": "msq-task"}]})
+
+    # ----------------------------------------------------- status
+    @_route("GET", "/status", None)
+    def _status(self):
+        self._send_json(200, {"version": __version__})
+
+    @_route("GET", "/status/health", None)
+    def _health(self):
+        self._send_json(200, True)
+
+    @_route("GET", "/status/properties")
+    def _properties(self):
+        # StatusResource.getProperties analog: the engine's live Spark
+        # SQL confs (the runtime properties a console shows)
+        from druid_spark.session import RUNTIME_CONFS
+        props = {}
+        for k in sorted(RUNTIME_CONFS):
+            try:
+                props[k] = self.engine.spark.conf.get(k)
+            except Exception:
+                pass
+        props["druid.spark.version"] = __version__
+        self._send_json(200, props)
+
+    @_route("GET", "/druid/coordinator/v1/loadstatus")
+    def _load_status(self):
+        # CoordinatorResource.getLoadStatus: single-process engine is
+        # always fully loaded
+        self._send_json(200, {"inventoryInitialized": True})
+
+    @_route("GET", "/druid/indexer/v1/isLeader", _STATE_READ)
+    @_route("GET", "/druid/coordinator/v1/isLeader")
+    def _is_leader(self):
+        self._send_json(200, {"leader": True})
+
+    @_route("GET", "/druid/indexer/v1/leader", _STATE_READ)
+    def _leader(self):
+        # OverlordResource.getLeader: the leader URL (single-node:
+        # always ourselves)
+        host, port = self.server.server_address[:2]
+        self._send_json(200, f"http://{host}:{port}")
+
+    @_route("GET", "/druid/coordinator/v1/cluster", _STATE_READ)
+    @_route("GET", "/druid/coordinator/v1/cluster/{role}", _STATE_READ)
+    def _cluster(self, role=None):
+        # ClusterResource.getClusterServers:63-88 — every role is this
+        # single process
+        host, port = self.server.server_address[:2]
+        node = {"host": f"{host}:{port}", "port": port, "tlsPort": -1}
+        roles = {"coordinator": [node], "overlord": [node],
+                 "broker": [node], "historical": [node]}
+        if role is None:
+            self._send_json(200, roles)
+        elif role.lower() in roles:
+            self._send_json(200, roles[role.lower()])
+        else:
+            self._error(400, "Invalid nodeRole", role)
+
+    @_route("GET", "/druid/coordinator/v1/servers", _STATE_READ)
+    def _servers(self):
+        # CoordinatorResource.getClusterServers: single-process — this
+        # engine is the whole cluster (?simple adds sizes)
+        server = f"local:{self.engine.spark.sparkContext.applicationId}"
+        if "simple" in self._query:
+            total = sum(sz for _ds, _p, sz, _nr
+                        in self.engine.catalog.segments())
+            self._send_json(200, [{
+                "host": server, "tier": "_default_tier",
+                "type": "historical", "currSize": total, "maxSize": -1}])
+        else:
+            self._send_json(200, [server])
+
+    # ------------------------------------------- datasources, segments
+    @_route("GET", "/druid/v2/datasources")
+    @_route("GET", "/druid/coordinator/v1/metadata/datasources")
+    def _datasource_names(self):
+        # filtered by READ permission, like the reference's authorized
+        # datasource listing (also MetadataResource.getDataSources)
+        self._send_json(200, self._readable(self.engine.catalog.tables()))
+
+    @_route("GET", "/druid/v2/datasources/{ds}", _DS_READ)
+    def _datasource_columns(self, ds):
+        # dimensions/metrics shape (QueryResource getDatasource?full
+        # analog — column schema)
+        try:
+            df = self.engine.catalog.table(ds)
+        except KeyError as e:
+            return self._send_json(404, error_body("Unknown datasource", e))
+        self._send_json(200, {
+            "name": ds,
+            "columns": [{"name": f.name,
+                         "type": f.dataType.simpleString().upper(),
+                         "nullable": f.nullable}
+                        for f in df.schema.fields]})
 
     def _ds_summary(self, name: str) -> dict:
         """DatasourcesResource ?simple shape: per-datasource tier +
@@ -1127,955 +1493,548 @@ class _Handler(BaseHTTPRequestHandler):
                          "minTime": starts[0] if starts else None,
                          "maxTime": ends[-1] if ends else None}}}
 
-    def _sec_404(self, msg: str) -> None:
-        self._send_json(404, {"error": "Not found", "errorMessage": msg,
-                              "errorClass": None, "host": None})
-
-    def _security_get(self, path: str) -> None:
-        m = self._SEC_RE.match(path)
-        if not m:
-            return self._sec_404(path)
-        kind, rest = m.group(1), (m.group(2) or "").strip("/")
-        be = self._sec_backend(kind)
-        if be is None:
-            return self._sec_404(f"no administrable {kind} backend")
-        parts = rest.split("/") if rest else []
-        if kind == "authentication":
-            if parts == ["users"]:
-                return self._send_json(200, be.user_names())
-            if len(parts) == 2 and parts[0] == "users":
-                if parts[1] not in be.users:
-                    return self._sec_404(parts[1])
-                return self._send_json(200, {
-                    "username": parts[1],
-                    "credentials": (
-                        {"set": be.users[parts[1]] is not None})})
+    @_route("GET", "/druid/coordinator/v1/datasources")
+    def _coordinator_datasources(self):
+        # DatasourcesResource.getQueryableDataSources: plain name list,
+        # ?simple adds per-datasource tier/segment rollups
+        names = self._readable(self.engine.catalog.tables())
+        if "simple" in self._query:
+            self._send_json(200, [self._ds_summary(t) for t in names])
         else:
-            if parts == ["users"]:
-                return self._send_json(200, be.user_names())
-            if parts == ["roles"]:
-                return self._send_json(200, be.role_names())
-            if len(parts) == 2 and parts[0] in ("users", "roles"):
-                out = (be.get_user(parts[1]) if parts[0] == "users"
-                       else be.get_role(parts[1]))
-                if out is None:
-                    return self._sec_404(parts[1])
-                return self._send_json(200, out)
-        self._sec_404(path)
+            self._send_json(200, names)
 
-    def _security_mutate(self, path: str, body, ident,
-                         method: str) -> None:
-        m = self._SEC_RE.match(path)
-        if not m:
-            return self._sec_404(path)
-        kind, rest = m.group(1), (m.group(2) or "").strip("/")
-        be = self._sec_backend(kind)
-        if be is None:
-            return self._sec_404(f"no administrable {kind} backend")
-        parts = rest.split("/") if rest else []
-
-        def done(ok: bool, action: str, status: int = 200,
-                 fail: int = 404) -> None:
-            if ok:
-                self.server.audit.record(  # type: ignore[attr-defined]
-                    key=path, type_="basic-security",
-                    payload={"action": action, "method": method,
-                             "body": body if isinstance(body, (dict, list))
-                             else None},
-                    author=ident, ip=self.client_address[0])
-                self._send_json(status, {})
-            else:
-                self._send_json(fail, {
-                    "error": "Invalid request", "errorMessage": rest,
-                    "errorClass": None, "host": None})
-
-        if kind == "authentication":
-            if len(parts) == 2 and parts[0] == "users":
-                if method == "POST":
-                    return done(be.create_user(parts[1]), "createUser",
-                                fail=400)
-                return done(be.delete_user(parts[1]), "deleteUser")
-            if len(parts) == 3 and parts[0] == "users" and \
-                    parts[2] == "credentials" and method == "POST":
-                pw = (body or {}).get("password")
-                if not isinstance(pw, str):
-                    return self._send_json(400, {
-                        "error": "Invalid request",
-                        "errorMessage": "missing password",
-                        "errorClass": None, "host": None})
-                return done(be.set_credentials(parts[1], pw),
-                            "updateCredentials")
+    @_route("GET", "/druid/coordinator/v1/datasources/{ds}", _DS_READ)
+    def _coordinator_datasource(self, ds):
+        # DatasourcesResource.getDataSource
+        if ds not in self.engine.catalog.tables():
+            self._error(404, "Not found", ds)
         else:
-            if len(parts) == 2 and parts[0] == "users":
-                if method == "POST":
-                    return done(be.create_user(parts[1]), "createUser",
-                                fail=400)
-                return done(be.delete_user(parts[1]), "deleteUser")
-            if len(parts) == 2 and parts[0] == "roles":
-                if method == "POST":
-                    return done(be.create_role(parts[1]), "createRole",
-                                fail=400)
-                return done(be.delete_role(parts[1]), "deleteRole")
-            if len(parts) == 4 and parts[0] == "users" and \
-                    parts[2] == "roles":
-                if method == "POST":
-                    return done(be.assign_role(parts[1], parts[3]),
-                                "assignRole")
-                return done(be.unassign_role(parts[1], parts[3]),
-                            "unassignRole")
-            if len(parts) == 3 and parts[0] == "roles" and \
-                    parts[2] == "permissions" and method == "POST":
-                if not isinstance(body, list):
-                    return self._send_json(400, {
-                        "error": "Invalid request",
-                        "errorMessage": "expected a permission list",
-                        "errorClass": None, "host": None})
-                try:
-                    return done(be.set_permissions(parts[1], body),
-                                "setPermissions")
-                except ValueError as e:
-                    return self._send_json(400, {
-                        "error": "Invalid request",
-                        "errorMessage": str(e),
-                        "errorClass": None, "host": None})
-        self._sec_404(path)
+            self._send_json(200, self._ds_summary(ds))
 
-    def _timed(self, fn, kind: str, detail: str) -> None:
-        """Run a query handler under the request logger (RequestLogger
-        contract: time, remote, identity, query id, success,
-        query/time ms). Streaming paths that write raw chunks leave
-        _last_status unset and log as 200 unless they raised."""
-        logger = getattr(self.server, "request_logger", None)
-        if logger is None:
-            fn()
-            return
-        self._last_status = None
-        self._last_qid = None
-        t0 = time.time()
-        try:
-            fn()
-        except Exception as e:
-            logger.log(kind=kind, detail=detail, status=500,
-                       identity=getattr(self, "_ident", None),
-                       remote=self.client_address[0],
-                       queryId=self._last_qid,
-                       success=False, error=type(e).__name__,
-                       query_time_ms=int((time.time() - t0) * 1000))
-            raise
-        status = self._last_status if self._last_status is not None else 200
-        logger.log(kind=kind, detail=detail, status=status,
-                   identity=getattr(self, "_ident", None),
-                   remote=self.client_address[0],
-                   queryId=self._last_qid,
-                   success=status < 400,
-                   query_time_ms=int((time.time() - t0) * 1000))
-
-    def _send(self, status: int, body: bytes,
-              ctype: str = "application/json", qid: str | None = None) -> None:
-        self._last_status = status
-        if qid:
-            self._last_qid = qid
-        self.send_response(status)
-        self.send_header("Content-Type", ctype)
-        self.send_header("Content-Length", str(len(body)))
-        if qid:
-            self.send_header("X-Druid-Query-Id", qid)
-        self.end_headers()
-        self.wfile.write(body)
-
-    def _send_json(self, status: int, obj: Any, qid: str | None = None) -> None:
-        self._send(status, json.dumps(obj).encode(), qid=qid)
-
-    def do_GET(self):  # noqa: N802
-        from urllib.parse import parse_qs, urlparse
-        u = urlparse(self.path)
-        path = u.path.rstrip("/")
-        # /status stays unsecured (reference status endpoints); every
-        # other read authenticates, with per-resource authorization
-        # where the path names one
-        ident = "allowAll"
-        if path not in ("/status", "/status/health"):
-            res = []
-            if (m := re.match(r"^/druid/v2/datasources/([^/]+)$", path)):
-                res = [(DATASOURCE, m.group(1), READ)]
-            elif (m := re.match(r"^/druid/coordinator/v1/metadata/"
-                                r"datasources/([^/]+)/segments$", path)):
-                res = [(DATASOURCE, m.group(1), READ)]
-            elif (m := re.match(r"^/druid/coordinator/v1/datasources/"
-                                r"([^/]+)/intervals$", path)):
-                res = [(DATASOURCE, m.group(1), READ)]
-            elif (m := re.match(r"^/druid/coordinator/v1/datasources/"
-                                r"([^/]+)$", path)):
-                res = [(DATASOURCE, m.group(1), READ)]
-            elif path.startswith("/druid/indexer/v1") or \
-                    path.startswith("/druid/coordinator/v1/config/"
-                                    "compaction") or \
-                    path.startswith("/druid/coordinator/v1/rules") or \
-                    path.startswith("/druid/coordinator/v1/lookups/"
-                                    "config") or \
-                    path == "/druid/coordinator/v1/servers" or \
-                    path == "/druid/coordinator/v1/compaction/status" or \
-                    path == "/druid/coordinator/v1/audit" or \
-                    path.startswith("/druid/coordinator/v1/config") or \
-                    path.startswith("/druid/coordinator/v1/broker/"
-                                    "config") or \
-                    path.startswith("/druid/coordinator/v1/cluster") or \
-                    path.startswith("/druid-ext/basic-security/"):
-                res = [(STATE, "STATE", READ)]
-            ident = self._auth(res)
-            if ident is None:
-                return
-        if path == "/status":
-            self._send_json(200, {"version": __version__})
-        elif path == "/status/health":
-            self._send_json(200, True)
-        elif path == "/status/properties":
-            # StatusResource.getProperties analog: the engine's live
-            # Spark SQL confs (the runtime properties a console shows)
-            from druid_spark.session import RUNTIME_CONFS
-            props = {}
-            for k in sorted(RUNTIME_CONFS):
-                try:
-                    props[k] = self.engine.spark.conf.get(k)
-                except Exception:
-                    pass
-            props["druid.spark.version"] = __version__
-            self._send_json(200, props)
-        elif path == "/druid/coordinator/v1/loadstatus":
-            # CoordinatorResource.getLoadStatus: single-process engine
-            # is always fully loaded
-            self._send_json(200, {"inventoryInitialized": True})
-        elif path == "/druid/v2/datasources":
-            # filtered by READ permission, like the reference's
-            # authorized datasource listing (AuthorizationUtils
-            # filterAuthorizedResources)
-            self._send_json(200, [
-                t for t in self.engine.catalog.tables()
-                if self._allowed(ident, DATASOURCE, t, READ)])
-        elif path == "/druid/coordinator/v1/config/compaction":
-            # CoordinatorCompactionConfigsResource.getCompactionConfig
-            duty = self.server.compaction  # type: ignore[attr-defined]
-            self._send_json(200, {"compactionConfigs":
-                                  list(duty.configs.values())})
-        elif path == "/druid/indexer/v1/compaction/config/datasources":
-            # the newer overlord-side home of the same configs
-            duty = self.server.compaction  # type: ignore[attr-defined]
-            self._send_json(200, {"compactionConfigs":
-                                  list(duty.configs.values())})
-        elif (m := re.match(r"^/druid/indexer/v1/compaction/config/"
-                            r"datasources/([^/]+)$", path)):
-            duty = self.server.compaction  # type: ignore[attr-defined]
-            cfg = duty.configs.get(m.group(1))
-            if cfg is None:
-                self._send_json(404, {"error": "Not found",
-                                      "errorMessage": m.group(1),
-                                      "errorClass": None, "host": None})
-            else:
-                self._send_json(200, cfg)
-        elif path == "/druid/indexer/v1/compaction/config/cluster":
-            self._send_json(200, {
-                "compactionPollPeriod": None,
-                "engine": "native", "useSupervisors": False})
-        elif path == "/druid/coordinator/v1/compaction/status":
-            # CompactionResource.getCompactionSnapshotForDataSource analog
-            duty = self.server.compaction  # type: ignore[attr-defined]
-            self._send_json(200, {"latestStatus": duty.history[-20:],
-                                  "pending": duty.scan()})
-        elif path == "/druid/coordinator/v1/config":
-            # CoordinatorDynamicConfig (CoordinatorResource
-            # getDynamicConfigs)
-            self._send_json(200, self.server.dynamic_config)  # type: ignore
-        elif path == "/druid/coordinator/v1/config/history":
-            q = parse_qs(u.query)
-            self._send_json(200, self.server.audit.history(  # type: ignore
-                type_="coordinator.config",
-                n=int((q.get("count") or ["100"])[0])))
-        elif path == "/druid/coordinator/v1/broker/config":
-            self._send_json(200, self.server.broker_config)  # type: ignore
-        elif path == "/druid/coordinator/v1/broker/config/history":
-            q = parse_qs(u.query)
-            self._send_json(200, self.server.audit.history(  # type: ignore
-                type_="broker.config",
-                n=int((q.get("count") or ["100"])[0])))
-        elif path == "/druid/coordinator/v1/cluster" or \
-                (m := re.match(r"^/druid/coordinator/v1/cluster/"
-                               r"([A-Za-z_]+)$", path)):
-            # ClusterResource.getClusterServers:63-88 — every role is
-            # this single process
-            host, port = self.server.server_address[:2]
-            node = {"host": f"{host}:{port}", "port": port,
-                    "tlsPort": -1}
-            roles = {"coordinator": [node], "overlord": [node],
-                     "broker": [node], "historical": [node]}
-            if path.endswith("/cluster"):
-                self._send_json(200, roles)
-            else:
-                role = m.group(1).lower()
-                if role in roles:
-                    self._send_json(200, roles[role])
-                else:
-                    self._send_json(400, {
-                        "error": "Invalid nodeRole",
-                        "errorMessage": m.group(1),
-                        "errorClass": None, "host": None})
-        elif path == "/druid/indexer/v1/workers":
-            # OverlordResource.getWorkers:701 — one in-process worker
-            # sized by the scheduler's slot pool
-            host, port = self.server.server_address[:2]
-            sched = self.server.scheduler  # type: ignore[attr-defined]
-            ov = self.server.overlord  # type: ignore[attr-defined]
-            running = [t for t, r in ov._tasks.items()
-                       if r["state"] == "RUNNING"]
-            cap = sched._total_cap or (os.cpu_count() or 1)
-            self._send_json(200, [{
-                "worker": {"scheme": "http", "host": f"{host}:{port}",
-                           "ip": str(host), "capacity": cap,
-                           "version": __version__, "category":
-                           "_default_worker_category"},
-                "currCapacityUsed": len(running),
-                "currParallelIndexCapacityUsed": 0,
-                "availabilityGroups": [],
-                "runningTasks": running,
-                "lastCompletedTaskTime": None,
-                "blacklistedUntil": None}])
-        elif path == "/druid/indexer/v1/totalWorkerCapacity":
-            # OverlordResource.getTotalWorkerCapacity:439 — the
-            # console's capacity gauge
-            sched = self.server.scheduler  # type: ignore[attr-defined]
-            ov = self.server.overlord  # type: ignore[attr-defined]
-            running = sum(1 for r in ov._tasks.values()
-                          if r["state"] == "RUNNING")
-            cap = sched._total_cap or (os.cpu_count() or 1)
-            self._send_json(200, {
-                "currentClusterCapacity": cap,
-                "usedClusterCapacity": running,
-                "maximumCapacityWithAutoScale": cap})
-        elif path == "/druid/indexer/v1/worker/history":
-            q = parse_qs(u.query)
-            self._send_json(200, self.server.audit.history(  # type: ignore
-                type_="worker.config",
-                n=int((q.get("count") or ["100"])[0])))
-        elif path == "/druid/v2/sql/task/enabled":
-            # SqlTaskResource — the console's MSQ capability probe
-            self._send_json(200, {"enabled": True})
-        elif path == "/druid/v2/sql/engines":
-            # the console's engine census (no dart here)
-            self._send_json(200, {"engines": [
-                {"name": "broker"}, {"name": "msq-task"}]})
-        elif path == "/druid/coordinator/v1/rules":
-            # RulesResource.getRules: rules per datasource
-            self._send_json(200, self.server.retention.rules)  # type: ignore
-        elif (m := re.match(r"^/druid/coordinator/v1/rules/([^/]+)$",
-                            path)) and m.group(1) != "history":
-            ret = self.server.retention  # type: ignore[attr-defined]
-            self._send_json(200, ret.rules.get(m.group(1), []))
-        elif path == "/druid/coordinator/v1/datasources":
-            # DatasourcesResource.getQueryableDataSources: plain name
-            # list, ?simple adds per-datasource tier/segment rollups
-            q = parse_qs(u.query)
-            names = [t for t in self.engine.catalog.tables()
-                     if self._allowed(ident, DATASOURCE, t, READ)]
-            if "simple" in q or "simple" in (u.query or ""):
-                self._send_json(200, [self._ds_summary(t)
-                                      for t in names])
-            else:
-                self._send_json(200, names)
-        elif (m := re.match(r"^/druid/coordinator/v1/datasources/"
-                            r"([^/]+)$", path)):
-            # DatasourcesResource.getDataSource
-            name = m.group(1)
-            if name not in self.engine.catalog.tables():
-                self._send_json(404, {"error": "Not found",
-                                      "errorMessage": name,
-                                      "errorClass": None, "host": None})
-            else:
-                self._send_json(200, self._ds_summary(name))
-        elif path == "/druid/coordinator/v1/metadata/datasources":
-            # coordinator metadata API (server/.../http/MetadataResource
-            # .java getDataSources)
-            self._send_json(200, [
-                t for t in self.engine.catalog.tables()
-                if self._allowed(ident, DATASOURCE, t, READ)])
-        elif path == "/druid/coordinator/v1/servers":
-            # CoordinatorResource.getClusterServers: single-process —
-            # this engine is the whole cluster (?simple adds sizes)
-            sc = self.engine.spark.sparkContext
-            server = f"local:{sc.applicationId}"
-            if "simple" in parse_qs(u.query or "",
-                                    keep_blank_values=True):
-                total = sum(sz for _ds, _p, sz, _nr
-                            in self.engine.catalog.segments())
-                self._send_json(200, [{
-                    "host": server, "tier": "_default_tier",
-                    "type": "historical", "currSize": total,
-                    "maxSize": -1}])
-            else:
-                self._send_json(200, [server])
-        elif path == "/druid/coordinator/v1/metadata/segments":
-            # MetadataResource.getAllUsedSegments (cluster-wide)
-            self._send_json(200, [
-                {"dataSource": ds, "segmentPath": p, "size": sz,
-                 "numRows": nr}
-                for ds, p, sz, nr in self.engine.catalog.segments()
-                if self._allowed(ident, DATASOURCE, ds, READ)])
-        elif path == "/druid/coordinator/v1/lookups/config":
-            # LookupCoordinatorResource.getTiers
-            self._send_json(200, self.engine.catalog.lookup_tiers())
-        elif (m := re.match(r"^/druid/coordinator/v1/lookups/config/"
-                            r"([^/]+)$", path)):
-            tier = self.engine.catalog.tier_lookups(m.group(1))
-            if tier is None:
-                self._send_json(404, {"error": "Not found",
-                                      "errorMessage": m.group(1),
-                                      "errorClass": None, "host": None})
-            else:
-                self._send_json(200, sorted(tier))
-        elif (m := re.match(r"^/druid/coordinator/v1/lookups/config/"
-                            r"([^/]+)/([^/]+)$", path)):
-            tier, name = m.group(1), m.group(2)
-            mapping = (self.engine.catalog.tier_lookups(tier)
-                       or {}).get(name)
-            if mapping is None:
-                self._send_json(404, {"error": "Not found",
-                                      "errorMessage": name,
-                                      "errorClass": None, "host": None})
-            else:
-                self._send_json(200, {
-                    "version": str(self.engine.catalog.version),
-                    "lookupExtractorFactory": {
-                        "type": "map",
-                        "map": {str(k): str(v)
-                                for k, v in mapping.items()}}})
-        elif path == "/druid/coordinator/v1/audit" or \
-                path == "/druid/coordinator/v1/rules/history":
-            # AuditManager.fetchAuditHistory (SQLAuditManager analog);
-            # rules/history is RulesResource.getDatasourceRuleHistory
-            q = parse_qs(u.query)
-            self._send_json(200, self.server.audit.history(  # type: ignore
-                key=(q.get("key") or [None])[0],
-                type_=("rules" if path.endswith("/rules/history")
-                       else (q.get("type") or [None])[0]),
-                n=int((q.get("count") or ["100"])[0])))
-        elif path.startswith("/druid-ext/basic-security/"):
-            self._security_get(path)
-        elif (m := re.match(r"^/druid/coordinator/v1/datasources/"
-                            r"([^/]+)/intervals$", path)):
-            # DataSourcesResource.getIntervalsWithServedSegments: the
-            # served intervals, newest first; ?simple adds per-interval
-            # size/count rollups
-            name = m.group(1)
-            if name not in self.engine.catalog.tables():
-                self._send_json(404, {"error": "Not found",
-                                      "errorMessage": name,
-                                      "errorClass": None, "host": None})
-                return
-            per: dict[str, dict] = {}
-            for ds, _p, sz, nr, start, end, _pn, _v \
-                    in self.engine.catalog.segments_full():
-                if ds != name or not start:
-                    continue
-                iv = f"{start}/{end}"
-                agg = per.setdefault(iv, {"size": 0, "count": 0})
-                agg["size"] += sz
-                agg["count"] += 1
-            if "simple" in parse_qs(u.query or "",
-                                    keep_blank_values=True):
-                self._send_json(
-                    200, dict(sorted(per.items(), reverse=True)))
-            else:
-                self._send_json(200, sorted(per, reverse=True))
-        elif (path.startswith("/druid/coordinator/v1/metadata/datasources/")
-              and path.endswith("/segments")):
-            # MetadataResource.getAllUsedSegmentsForDatasource: the
-            # engine's segments are the warehouse parquet partitions.
-            # ?full mirrors the DataSegment JSON shape (interval,
-            # version, shardSpec) like the reference's full= arm.
-            name = path.split("/")[-2]
-            if "full" in parse_qs(u.query or "", keep_blank_values=True):
-                segs = [{"dataSource": ds,
-                         "interval": (f"{start}/{end}"
-                                      if start else None),
-                         "version": ver,
-                         "loadSpec": {"type": "local", "path": p},
-                         "shardSpec": {"type": "numbered",
-                                       "partitionNum": pnum},
-                         "size": sz, "numRows": nr,
-                         "identifier": f"{ds}_{start or 'all'}_{pnum}"}
-                        for ds, p, sz, nr, start, end, pnum, ver
-                        in self.engine.catalog.segments_full()
-                        if ds == name]
-            else:
-                segs = [{"dataSource": ds, "segmentPath": p, "size": sz,
-                         "numRows": nr}
-                        for ds, p, sz, nr in self.engine.catalog.segments()
-                        if ds == name]
-            if not segs and name not in self.engine.catalog.tables():
-                self._send_json(404, {"error": "Not found",
-                                      "errorMessage": name,
-                                      "errorClass": None, "host": None})
-                return
-            self._send_json(200, segs)
-        elif path.startswith("/druid/v2/datasources/"):
-            # GET /druid/v2/datasources/{name}: dimensions/metrics shape
-            # (QueryResource getDatasource?full analog — column schema)
-            name = path.split("/")[-1]
-            try:
-                df = self.engine.catalog.table(name)
-            except KeyError as e:
-                self._send_json(404, error_body("Unknown datasource", e))
-                return
-            self._send_json(200, {
-                "name": name,
-                "columns": [{"name": f.name,
-                             "type": f.dataType.simpleString().upper(),
-                             "nullable": f.nullable}
-                            for f in df.schema.fields]})
-        elif path == "/druid/indexer/v1/leader":
-            # OverlordResource.getLeader: the leader URL (single-node:
-            # always ourselves)
-            host, port = self.server.server_address[:2]
-            self._send_json(200, f"http://{host}:{port}")
-        elif path in ("/druid/indexer/v1/isLeader",
-                      "/druid/coordinator/v1/isLeader"):
-            self._send_json(200, {"leader": True})
-        elif path == "/druid/indexer/v1/worker":
-            # OverlordResource.getWorkerConfig (dynamic config; null
-            # until one is posted, like the reference)
-            self._send_json(
-                200, self.server.overlord.worker_config)  # type: ignore
-        elif (m := re.match(
-                r"^/druid/indexer/v1/(tasks|runningTasks|completeTasks"
-                r"|waitingTasks|pendingTasks)$", path)):
-            state = {"tasks": None, "runningTasks": "running",
-                     "completeTasks": "complete",
-                     "waitingTasks": "waiting",
-                     "pendingTasks": "pending"}[m.group(1)]
-            self._send_json(200, self.server.overlord.tasks(state))  # type: ignore
-        elif (m := re.match(
-                r"^/druid/indexer/v1/task/([^/]+)/status$", path)):
-            status, out = self.server.overlord.status(m.group(1))  # type: ignore
-            self._send_json(status, out)
-        elif (m := re.match(
-                r"^/druid/indexer/v1/task/([^/]+)/reports$", path)):
-            status, out = self.server.overlord.reports(m.group(1))  # type: ignore
-            self._send_json(status, out)
-        elif (m := re.match(r"^/druid/indexer/v1/task/([^/]+)$", path)):
-            status, out = self.server.overlord.payload(m.group(1))  # type: ignore
-            self._send_json(status, out)
-        elif path == "/druid/indexer/v1/supervisor":
-            # SupervisorResource.specGetAll: plain → ids, ?full → specs,
-            # ?state=true → per-supervisor state summaries
-            ov = self.server.overlord  # type: ignore[attr-defined]
-            q = parse_qs(u.query, keep_blank_values=True)
-            if "full" in q:
-                self._send_json(200, [
-                    {"id": sid, "spec": ov.supervisor_get(sid)[1]}
-                    for sid in ov.supervisor_ids()])
-            elif q.get("state", ["false"])[0].lower() == "true":
-                self._send_json(200, [
-                    {"id": sid, **ov.supervisor_status(sid)[1]["payload"]}
-                    for sid in ov.supervisor_ids()])
-            else:
-                self._send_json(200, ov.supervisor_ids())
-        elif (m := re.match(
-                r"^/druid/indexer/v1/supervisor/([^/]+)/status$", path)):
-            status, out = self.server.overlord.supervisor_status(  # type: ignore
-                m.group(1))
-            self._send_json(status, out)
-        elif (m := re.match(
-                r"^/druid/indexer/v1/supervisor/([^/]+)$", path)):
-            status, out = self.server.overlord.supervisor_get(m.group(1))  # type: ignore
-            self._send_json(status, out)
-        elif path.startswith("/druid/v2/sql/statements/"):
-            parts = path.split("/")
-            st = self.server.statements  # type: ignore[attr-defined]
-            qid = parts[-2] if parts[-1] == "results" else parts[-1]
-            # owner check (SqlStatementResource: status/results are
-            # owner-scoped — another authenticated identity may not
-            # read a statement's results given only its queryId)
-            if st.owner_mismatch(qid, ident):
-                self._send_json(403, {
-                    "error": "Forbidden",
-                    "errorMessage": f"statement {qid} belongs to "
-                                    f"another identity",
-                    "errorClass": None, "host": None})
-                return
-            if parts[-1] == "results":
-                q = parse_qs(u.query)
-                try:
-                    page = int(q.get("page", ["0"])[0])
-                    if page < 0:
-                        raise ValueError(page)
-                except ValueError:
-                    self._send_json(400, {
-                        "error": "Invalid page",
-                        "errorMessage": str(q.get("page")),
-                        "errorClass": None, "host": None})
-                    return
-                code, body = st.results(parts[-2], page=page)
-                self._send_json(code, body)
-            else:
-                out = st.status(parts[-1])
-                if out is None:
-                    self._send_json(404, {"error": "Not found",
-                                          "errorMessage": parts[-1],
-                                          "errorClass": None, "host": None})
-                else:
-                    self._send_json(200, out)
+    @_route("GET", "/druid/coordinator/v1/datasources/{ds}/intervals",
+            _DS_READ)
+    def _datasource_intervals(self, ds):
+        # DataSourcesResource.getIntervalsWithServedSegments: the
+        # served intervals, newest first; ?simple adds per-interval
+        # size/count rollups
+        if ds not in self.engine.catalog.tables():
+            return self._error(404, "Not found", ds)
+        per: dict[str, dict] = {}
+        for name, _p, sz, _nr, start, end, _pn, _v \
+                in self.engine.catalog.segments_full():
+            if name != ds or not start:
+                continue
+            agg = per.setdefault(f"{start}/{end}", {"size": 0, "count": 0})
+            agg["size"] += sz
+            agg["count"] += 1
+        if "simple" in self._query:
+            self._send_json(200, dict(sorted(per.items(), reverse=True)))
         else:
-            self._send_json(404, {"error": "Not found",
-                                  "errorMessage": self.path,
-                                  "errorClass": None, "host": None})
+            self._send_json(200, sorted(per, reverse=True))
 
-    def do_DELETE(self):  # noqa: N802
-        path = self.path.rstrip("/")
-        res = []
-        if (m := re.match(
-                r"^/druid/coordinator/v1/datasources/([^/]+)$", path)):
-            res = [(DATASOURCE, m.group(1), WRITE)]
-        elif path.startswith("/druid/coordinator/v1/config/compaction/") \
-                or path.startswith("/druid/coordinator/v1/lookups/"
-                                   "config/") \
-                or path.startswith("/druid-ext/basic-security/"):
-            res = [(STATE, "STATE", WRITE)]
-        ident = self._auth(res)
-        if ident is None:
-            return
-        if path.startswith("/druid-ext/basic-security/"):
-            self._security_mutate(path, None, ident, "DELETE")
-            return
-        if (m := re.match(r"^/druid/coordinator/v1/lookups/config/"
-                          r"([^/]+)/([^/]+)$", path)):
-            # LookupCoordinatorResource.deleteLookup (tier-scoped)
-            if self.engine.catalog.drop_lookup(m.group(2),
-                                               tier=m.group(1)):
-                self.server.audit.record(  # type: ignore[attr-defined]
-                    key=f"{m.group(1)}/{m.group(2)}", type_="lookups",
-                    payload=None, author=ident,
-                    ip=self.client_address[0])
-                self._send_json(202, {})
-            else:
-                self._send_json(404, {"error": "Not found",
-                                      "errorMessage": m.group(2),
-                                      "errorClass": None, "host": None})
-            return
-        if (m := re.match(
-                r"^/druid/coordinator/v1/config/compaction/([^/]+)$",
-                path)):
-            # CoordinatorCompactionConfigsResource.deleteCompactionConfig
-            if self.server.compaction.remove_config(m.group(1)):  # type: ignore
-                self.server.audit.record(  # type: ignore[attr-defined]
-                    key=m.group(1), type_="compaction.config",
-                    payload=None, author=ident,
-                    ip=self.client_address[0])
-                self._send_json(200, {})
-            else:
-                self._send_json(404, {"error": "Not found",
-                                      "errorMessage": m.group(1),
-                                      "errorClass": None, "host": None})
-            return
-        if (m := re.match(
-                r"^/druid/coordinator/v1/datasources/([^/]+)$", path)):
-            # DatasourcesResource.markAsUnusedAllSegments analog: the
-            # datasource stops resolving; disk files are untouched
-            # (reclaim is the kill task's job)
-            if self.engine.catalog.drop_table(m.group(1)):
-                self._send_json(200, {})
-            else:
-                self._send_json(404, {"error": "Not found",
-                                      "errorMessage": m.group(1),
-                                      "errorClass": None, "host": None})
-            return
-        if path.startswith("/druid/v2/sql/statements/"):
-            qid = path.split("/")[-1]
-            st = self.server.statements  # type: ignore[attr-defined]
-            if st.owner_mismatch(qid, ident):
-                self._send_json(403, {
-                    "error": "Forbidden",
-                    "errorMessage": f"statement {qid} belongs to "
-                                    f"another identity",
-                    "errorClass": None, "host": None})
-                return
-            ok = self.server.statements.cancel(qid)  # type: ignore
-            if ok:
-                self._send(202, b"")
-            else:
-                self._send_json(404, {"error": "Not found",
-                                      "errorMessage": qid,
-                                      "errorClass": None, "host": None})
-        elif path.startswith("/druid/v2/sql/") or path.startswith("/druid/v2/"):
-            # DELETE /druid/v2/{queryId} (QueryResource.cancelQuery) and
-            # DELETE /druid/v2/sql/{sqlQueryId} (SqlResource.cancelQuery):
-            # 202 if the id was running, 404 otherwise.
-            qid = path.split("/")[-1]
-            sched = self.server.scheduler  # type: ignore[attr-defined]
-            if sched.cancel(qid):
-                self._send(202, b"")
-            else:
-                self._send_json(404, {"error": "Not found",
-                                      "errorMessage": qid,
-                                      "errorClass": None, "host": None})
+    @_route("DELETE", "/druid/coordinator/v1/datasources/{ds}", _DS_WRITE)
+    def _drop_datasource(self, ds):
+        # DatasourcesResource.markAsUnusedAllSegments analog: the
+        # datasource stops resolving; disk files are untouched
+        # (reclaim is the kill task's job)
+        if self.engine.catalog.drop_table(ds):
+            self._send_json(200, {})
         else:
-            self._send_json(404, {"error": "Not found",
-                                  "errorMessage": self.path,
-                                  "errorClass": None, "host": None})
+            self._error(404, "Not found", ds)
 
-    def do_POST(self):  # noqa: N802
-        try:
-            n = int(self.headers.get("Content-Length", 0))
-            raw = self.rfile.read(n)
-            body = json.loads(raw) if raw else {}
-        except (ValueError, TypeError) as e:
-            self._send_json(400, error_body("Unable to parse query", e))
-            return
-        path = self.path.rstrip("/")
-        ident = self._auth(self._post_resources(path, body))
-        if ident is None:
-            return
-        self._ident = ident
-        if path == "/druid/v2":
-            self._timed(lambda: self._native(body), "native",
-                        str(body.get("dataSource")))
-        elif path == "/druid/v2/sql":
-            self._timed(lambda: self._sql(body), "sql",
-                        (body.get("query") or "")[:500])
-        elif path == "/druid/v2/sql/avatica":
-            status, out = self.server.avatica.handle(  # type: ignore
-                body, identity=getattr(self, "_ident", None))
-            self._send_json(status, out)
-        elif path == "/druid/indexer/v1/task":
-            status, out = self.server.overlord.submit(body)  # type: ignore
-            self._send_json(status, out)
-        elif (m := re.match(
-                r"^/druid/indexer/v1/task/([^/]+)/shutdown$", path)):
-            status, out = self.server.overlord.shutdown(m.group(1))  # type: ignore
-            self._send_json(status, out)
-        elif (m := re.match(
-                r"^/druid/indexer/v1/datasources/([^/]+)"
-                r"/shutdownAllTasks$", path)):
-            status, out = self.server.overlord.shutdown_datasource(  # type: ignore
-                m.group(1))
-            self._send_json(status, out)
-        elif path == "/druid/indexer/v1/supervisor":
-            status, out = self.server.overlord.supervisor_submit(body)  # type: ignore
-            self._send_json(status, out)
-        elif (m := re.match(
-                r"^/druid/indexer/v1/supervisor/([^/]+)/"
-                r"(suspend|resume|shutdown|terminate|reset)$", path)):
-            ov = self.server.overlord  # type: ignore[attr-defined]
-            fn = {"suspend": ov.supervisor_suspend,
-                  "resume": ov.supervisor_resume,
-                  "shutdown": ov.supervisor_shutdown,
-                  "terminate": ov.supervisor_shutdown,
-                  "reset": ov.supervisor_reset}[m.group(2)]
-            status, out = fn(m.group(1))
-            self._send_json(status, out)
-        elif path == "/druid/coordinator/v1/config/compaction" or \
-                re.match(r"^/druid/indexer/v1/compaction/config/"
-                         r"datasources/[^/]+$", path):
-            # CoordinatorCompactionConfigsResource.addOrUpdate (also
-            # reachable at the newer overlord-side path, where the
-            # datasource rides the URL)
-            if (m := re.match(r"^/druid/indexer/v1/compaction/config/"
-                              r"datasources/([^/]+)$", path)):
-                body = dict(body or {})
-                body.setdefault("dataSource", m.group(1))
-            ds = body.get("dataSource")
-            if not ds:
-                self._send_json(400, {"error": "Invalid config",
-                                      "errorMessage": "missing dataSource",
-                                      "errorClass": None, "host": None})
-                return
-            duty = self.server.compaction  # type: ignore[attr-defined]
-            duty.set_config(
-                ds,
-                max_files_per_partition=int(
-                    body.get("maxFilesPerPartition", 8)),
-                target_files=int(body.get("targetFiles", 1)))
-            self.server.audit.record(  # type: ignore[attr-defined]
-                key=ds, type_="compaction.config", payload=body,
-                author=ident, ip=self.client_address[0])
+    @_route("POST", "/druid/coordinator/v1/datasources/{ds}", _DS_WRITE)
+    def _restore_datasource(self, ds):
+        # DataSourcesResource.markAsUsedAllNonOvershadowedSegments
+        # (DataSourcesResource.java:206): re-enable a datasource a
+        # prior DELETE marked unused; response mirrors the
+        # reference's SegmentUpdateResponse
+        if not self.engine.catalog.restore_table(ds):
+            return self._error(404, "Not found", ds)
+        segs = sum(1 for d, *_ in self.engine.catalog.segments() if d == ds)
+        self._audit(ds, "segments.markUsed", None)
+        self._send_json(200, {"numChangedSegments": segs})
+
+    @_route("GET", "/druid/coordinator/v1/metadata/segments")
+    def _all_segments(self):
+        # MetadataResource.getAllUsedSegments (cluster-wide)
+        self._send_json(200, [
+            {"dataSource": ds, "segmentPath": p, "size": sz, "numRows": nr}
+            for ds, p, sz, nr in self.engine.catalog.segments()
+            if self._allowed(self._ident, DATASOURCE, ds, READ)])
+
+    @_route("GET", "/druid/coordinator/v1/metadata/datasources/{ds}/segments",
+            _DS_READ)
+    def _datasource_segments(self, ds):
+        # MetadataResource.getAllUsedSegmentsForDatasource: the
+        # engine's segments are the warehouse parquet partitions.
+        # ?full mirrors the DataSegment JSON shape (interval, version,
+        # shardSpec) like the reference's full= arm.
+        cat = self.engine.catalog
+        if "full" in self._query:
+            segs = [{"dataSource": name,
+                     "interval": f"{start}/{end}" if start else None,
+                     "version": ver,
+                     "loadSpec": {"type": "local", "path": p},
+                     "shardSpec": {"type": "numbered",
+                                   "partitionNum": pnum},
+                     "size": sz, "numRows": nr,
+                     "identifier": f"{name}_{start or 'all'}_{pnum}"}
+                    for name, p, sz, nr, start, end, pnum, ver
+                    in cat.segments_full() if name == ds]
+        else:
+            segs = [{"dataSource": name, "segmentPath": p, "size": sz,
+                     "numRows": nr}
+                    for name, p, sz, nr in cat.segments() if name == ds]
+        if not segs and ds not in cat.tables():
+            return self._error(404, "Not found", ds)
+        self._send_json(200, segs)
+
+    # ------------------------------------- coordinator dynamic config
+    def _history(self, type_: str | None, key: str | None = None) -> None:
+        # AuditManager.fetchAuditHistory (SQLAuditManager analog)
+        self._send_json(200, self.server.audit.history(
+            key=key, type_=type_, n=int(self._arg("count", "100"))))
+
+    @_route("GET", "/druid/coordinator/v1/audit", _STATE_READ)
+    def _audit_history(self):
+        self._history(self._arg("type"), key=self._arg("key"))
+
+    @_route("GET", "/druid/coordinator/v1/config", _STATE_READ)
+    def _coordinator_config(self):
+        # CoordinatorDynamicConfig (CoordinatorResource getDynamicConfigs)
+        self._send_json(200, self.server.dynamic_config)
+
+    @_route("POST", "/druid/coordinator/v1/config", _STATE_WRITE)
+    def _set_coordinator_config(self):
+        # CoordinatorResource.setDynamicConfigs: merge-updates the
+        # dynamic config (unknown keys accepted like the reference's
+        # lenient deserialization), audit-recorded
+        if not isinstance(self._body, dict):
+            return self._error(400, "Invalid config", "expected object")
+        self.server.dynamic_config.update(self._body)
+        self._audit("coordinator.config", "coordinator.config", self._body)
+        self._send_json(200, {})
+
+    @_route("GET", "/druid/coordinator/v1/config/history", _STATE_READ)
+    def _coordinator_config_history(self):
+        self._history("coordinator.config")
+
+    @_route("GET", "/druid/coordinator/v1/broker/config", _STATE_READ)
+    def _broker_config(self):
+        self._send_json(200, self.server.broker_config)
+
+    @_route("POST", "/druid/coordinator/v1/broker/config", _STATE_WRITE)
+    def _set_broker_config(self):
+        if not isinstance(self._body, dict):
+            return self._error(400, "Invalid config", "expected object")
+        self.server.broker_config = self._body
+        self._audit("broker.config", "broker.config", self._body)
+        self._send_json(200, {})
+
+    @_route("GET", "/druid/coordinator/v1/broker/config/history",
+            _STATE_READ)
+    def _broker_config_history(self):
+        self._history("broker.config")
+
+    # --------------------------------------------- compaction, retention
+    @_route("GET", "/druid/coordinator/v1/config/compaction", _STATE_READ)
+    @_route("GET", "/druid/indexer/v1/compaction/config/datasources",
+            _STATE_READ)
+    def _compaction_configs(self):
+        # CoordinatorCompactionConfigsResource.getCompactionConfig (and
+        # the newer overlord-side home of the same configs)
+        self._send_json(200, {"compactionConfigs":
+                              list(self.server.compaction.configs.values())})
+
+    @_route("GET", "/druid/indexer/v1/compaction/config/datasources/{ds}",
+            _STATE_READ)
+    def _compaction_config(self, ds):
+        cfg = self.server.compaction.configs.get(ds)
+        if cfg is None:
+            self._error(404, "Not found", ds)
+        else:
+            self._send_json(200, cfg)
+
+    @_route("POST", "/druid/coordinator/v1/config/compaction", _STATE_WRITE)
+    @_route("POST", "/druid/indexer/v1/compaction/config/datasources/{ds}",
+            _STATE_WRITE)
+    def _set_compaction_config(self, ds=None):
+        # CoordinatorCompactionConfigsResource.addOrUpdate (also
+        # reachable at the newer overlord-side path, where the
+        # datasource rides the URL)
+        body = self._body
+        if ds is not None:
+            body = dict(body or {})
+            body.setdefault("dataSource", ds)
+        ds = body.get("dataSource")
+        if not ds:
+            return self._error(400, "Invalid config", "missing dataSource")
+        self.server.compaction.set_config(
+            ds,
+            max_files_per_partition=int(body.get("maxFilesPerPartition", 8)),
+            target_files=int(body.get("targetFiles", 1)))
+        self._audit(ds, "compaction.config", body)
+        self._send_json(200, {})
+
+    @_route("DELETE", "/druid/coordinator/v1/config/compaction/{ds}",
+            _STATE_WRITE)
+    def _delete_compaction_config(self, ds):
+        # CoordinatorCompactionConfigsResource.deleteCompactionConfig
+        if self.server.compaction.remove_config(ds):
+            self._audit(ds, "compaction.config", None)
             self._send_json(200, {})
-        elif (m := re.match(r"^/druid/coordinator/v1/rules/([^/]+)$",
-                            path)):
-            # RulesResource.setDatasourceRules
-            if not isinstance(body, list):
-                self._send_json(400, {"error": "Invalid rules",
-                                      "errorMessage": "expected a list",
-                                      "errorClass": None, "host": None})
-                return
-            self.server.retention.set_rules(m.group(1), body)  # type: ignore
-            self.server.audit.record(  # type: ignore[attr-defined]
-                key=m.group(1), type_="rules", payload=body,
-                author=ident, ip=self.client_address[0])
-            self._send_json(200, {})
-        elif path == "/druid/coordinator/v1/retention/run":
-            dropped = self.server.retention.run_once()  # type: ignore
-            self._send_json(200, {"dropped": dropped})
-        elif (m := re.match(
-                r"^/druid/coordinator/v1/datasources/([^/]+)$", path)):
-            # DataSourcesResource.markAsUsedAllNonOvershadowedSegments
-            # (DataSourcesResource.java:206): re-enable a datasource a
-            # prior DELETE marked unused; response mirrors the
-            # reference's SegmentUpdateResponse
-            if self.engine.catalog.restore_table(m.group(1)):
-                segs = sum(1 for d, *_ in self.engine.catalog.segments()
-                           if d == m.group(1))
-                self.server.audit.record(  # type: ignore[attr-defined]
-                    key=m.group(1), type_="segments.markUsed",
-                    payload=None, author=ident,
-                    ip=self.client_address[0])
-                self._send_json(200, {"numChangedSegments": segs})
-            else:
-                self._send_json(404, {"error": "Not found",
-                                      "errorMessage": m.group(1),
-                                      "errorClass": None, "host": None})
-        elif path == "/druid/indexer/v1/worker":
-            # OverlordResource.setWorkerConfig
-            self.server.overlord.worker_config = body  # type: ignore
-            self.server.audit.record(  # type: ignore[attr-defined]
-                key="worker.config", type_="worker.config",
-                payload=body, author=ident, ip=self.client_address[0])
-            self._send_json(200, {})
-        elif path == "/druid/coordinator/v1/config":
-            # CoordinatorResource.setDynamicConfigs: merge-updates the
-            # dynamic config (unknown keys accepted like the reference's
-            # lenient deserialization), audit-recorded
-            if not isinstance(body, dict):
-                self._send_json(400, {"error": "Invalid config",
-                                      "errorMessage": "expected object",
-                                      "errorClass": None, "host": None})
-                return
-            self.server.dynamic_config.update(body)  # type: ignore
-            self.server.audit.record(  # type: ignore[attr-defined]
-                key="coordinator.config", type_="coordinator.config",
-                payload=body, author=ident, ip=self.client_address[0])
-            self._send_json(200, {})
-        elif path == "/druid/coordinator/v1/broker/config":
-            if not isinstance(body, dict):
-                self._send_json(400, {"error": "Invalid config",
-                                      "errorMessage": "expected object",
-                                      "errorClass": None, "host": None})
-                return
-            self.server.broker_config = body  # type: ignore
-            self.server.audit.record(  # type: ignore[attr-defined]
-                key="broker.config", type_="broker.config",
-                payload=body, author=ident, ip=self.client_address[0])
-            self._send_json(200, {})
-        elif (m := re.match(r"^/druid/coordinator/v1/lookups/config/"
-                            r"([^/]+)/([^/]+)$", path)):
-            # LookupCoordinatorResource.createOrUpdateLookup: only the
-            # map factory is representable (URI namespaces load via
-            # druid_spark.lookups.load_lookup). The tier segment is
-            # honored (reference manages arbitrary tiers); non-default
-            # tiers resolve as 'tier/name'.
-            fac = (body or {}).get("lookupExtractorFactory") or {}
-            if fac.get("type") != "map" or \
-                    not isinstance(fac.get("map"), dict):
-                self._send_json(400, {
-                    "error": "Invalid lookup",
-                    "errorMessage": "expected lookupExtractorFactory "
-                                    "{type: map, map: {...}}",
-                    "errorClass": None, "host": None})
-                return
-            self.engine.catalog.register_lookup(
-                m.group(2), fac["map"], tier=m.group(1))
-            self.server.audit.record(  # type: ignore[attr-defined]
-                key=f"{m.group(1)}/{m.group(2)}", type_="lookups",
-                payload=body, author=ident, ip=self.client_address[0])
+        else:
+            self._error(404, "Not found", ds)
+
+    @_route("GET", "/druid/indexer/v1/compaction/config/cluster",
+            _STATE_READ)
+    def _compaction_cluster_config(self):
+        self._send_json(200, {"compactionPollPeriod": None,
+                              "engine": "native", "useSupervisors": False})
+
+    @_route("GET", "/druid/coordinator/v1/compaction/status", _STATE_READ)
+    def _compaction_status(self):
+        # CompactionResource.getCompactionSnapshotForDataSource analog
+        duty = self.server.compaction
+        self._send_json(200, {"latestStatus": duty.history[-20:],
+                              "pending": duty.scan()})
+
+    @_route("POST", "/druid/coordinator/v1/compaction/run", _STATE_WRITE)
+    def _run_compaction(self):
+        # manual duty cycle (the coordinator fires this on its period;
+        # exposed for operators and tests)
+        self._send_json(200, {"compacted": self.server.compaction.run_once()})
+
+    @_route("GET", "/druid/coordinator/v1/rules", _STATE_READ)
+    def _all_rules(self):
+        # RulesResource.getRules: rules per datasource
+        self._send_json(200, self.server.retention.rules)
+
+    # declared before rules/{ds}, which would also match it
+    @_route("GET", "/druid/coordinator/v1/rules/history", _STATE_READ)
+    def _rules_history(self):
+        # RulesResource.getDatasourceRuleHistory
+        self._history("rules", key=self._arg("key"))
+
+    @_route("GET", "/druid/coordinator/v1/rules/{ds}", _STATE_READ)
+    def _rules(self, ds):
+        self._send_json(200, self.server.retention.rules.get(ds, []))
+
+    @_route("POST", "/druid/coordinator/v1/rules/{ds}", _STATE_WRITE)
+    def _set_rules(self, ds):
+        # RulesResource.setDatasourceRules
+        if not isinstance(self._body, list):
+            return self._error(400, "Invalid rules", "expected a list")
+        self.server.retention.set_rules(ds, self._body)
+        self._audit(ds, "rules", self._body)
+        self._send_json(200, {})
+
+    @_route("POST", "/druid/coordinator/v1/retention/run", _STATE_WRITE)
+    def _run_retention(self):
+        self._send_json(200, {"dropped": self.server.retention.run_once()})
+
+    # ----------------------------------------------------------- lookups
+    @_route("GET", "/druid/coordinator/v1/lookups/config", _STATE_READ)
+    def _lookup_tiers(self):
+        # LookupCoordinatorResource.getTiers
+        self._send_json(200, self.engine.catalog.lookup_tiers())
+
+    @_route("GET", "/druid/coordinator/v1/lookups/config/{tier}",
+            _STATE_READ)
+    def _tier_lookups(self, tier):
+        names = self.engine.catalog.tier_lookups(tier)
+        if names is None:
+            self._error(404, "Not found", tier)
+        else:
+            self._send_json(200, sorted(names))
+
+    @_route("GET", "/druid/coordinator/v1/lookups/config/{tier}/{name}",
+            _STATE_READ)
+    def _lookup(self, tier, name):
+        mapping = (self.engine.catalog.tier_lookups(tier) or {}).get(name)
+        if mapping is None:
+            return self._error(404, "Not found", name)
+        self._send_json(200, {
+            "version": str(self.engine.catalog.version),
+            "lookupExtractorFactory": {
+                "type": "map",
+                "map": {str(k): str(v) for k, v in mapping.items()}}})
+
+    @_route("POST", "/druid/coordinator/v1/lookups/config/{tier}/{name}",
+            _STATE_WRITE)
+    def _set_lookup(self, tier, name):
+        # LookupCoordinatorResource.createOrUpdateLookup: only the map
+        # factory is representable (URI namespaces load via
+        # druid_spark.lookups.load_lookup). The tier segment is honored
+        # (reference manages arbitrary tiers); non-default tiers
+        # resolve as 'tier/name'.
+        fac = (self._body or {}).get("lookupExtractorFactory") or {}
+        if fac.get("type") != "map" or not isinstance(fac.get("map"), dict):
+            return self._error(400, "Invalid lookup",
+                               "expected lookupExtractorFactory "
+                               "{type: map, map: {...}}")
+        self.engine.catalog.register_lookup(name, fac["map"], tier=tier)
+        self._audit(f"{tier}/{name}", "lookups", self._body)
+        self._send_json(202, {})
+
+    @_route("POST", "/druid/coordinator/v1/lookups/config", _STATE_WRITE)
+    def _set_lookups(self):
+        # bulk update: {tier: {name: {lookupExtractorFactory...}}}
+        tiers = self._body if isinstance(self._body, dict) else {}
+        n = 0
+        for tname, specs in tiers.items():
+            for lname, spec in (specs or {}).items():
+                fac = (spec or {}).get("lookupExtractorFactory") or {}
+                if fac.get("type") == "map" and \
+                        isinstance(fac.get("map"), dict):
+                    self.engine.catalog.register_lookup(
+                        lname, fac["map"], tier=tname)
+                    n += 1
+        if n:
+            self._audit("__bulk", "lookups", self._body)
+        self._send_json(202, {"updated": n})
+
+    @_route("DELETE", "/druid/coordinator/v1/lookups/config/{tier}/{name}",
+            _STATE_WRITE)
+    def _delete_lookup(self, tier, name):
+        # LookupCoordinatorResource.deleteLookup (tier-scoped)
+        if self.engine.catalog.drop_lookup(name, tier=tier):
+            self._audit(f"{tier}/{name}", "lookups", None)
             self._send_json(202, {})
-        elif path == "/druid/coordinator/v1/lookups/config":
-            # bulk update: {tier: {name: {lookupExtractorFactory...}}}
-            tiers = body if isinstance(body, dict) else {}
-            n = 0
-            for tname, specs in tiers.items():
-                for lname, spec in (specs or {}).items():
-                    fac = (spec or {}).get(
-                        "lookupExtractorFactory") or {}
-                    if fac.get("type") == "map" and \
-                            isinstance(fac.get("map"), dict):
-                        self.engine.catalog.register_lookup(
-                            lname, fac["map"], tier=tname)
-                        n += 1
-            if n:
-                self.server.audit.record(  # type: ignore[attr-defined]
-                    key="__bulk", type_="lookups", payload=body,
-                    author=ident, ip=self.client_address[0])
-            self._send_json(202, {"updated": n})
-        elif path.startswith("/druid-ext/basic-security/"):
-            self._security_mutate(path, body, ident, "POST")
-        elif path == "/druid/coordinator/v1/compaction/run":
-            # manual duty cycle (the coordinator fires this on its
-            # period; exposed for operators and tests)
-            work = self.server.compaction.run_once()  # type: ignore
-            self._send_json(200, {"compacted": work})
-        elif path in ("/druid/v2/sql/statements", "/druid/v2/sql/task"):
-            # /sql/task is the MSQ entry (sql/.../sql/http/SqlTaskResource
-            # analog, SURVEY §3.3): same async machinery, task-shaped
-            # response. INSERT/REPLACE route through the engine's SQL
-            # ingestion writer like any engine.sql() call.
-            text = body.get("query")
-            if not text:
-                self._send_json(
-                    400, {"error": "SQL parse failed",
-                          "errorMessage": "missing 'query'",
-                          "errorClass": None, "host": None})
-                return
-            out = self.server.statements.submit(  # type: ignore
-                text, body.get("parameters"),
-                identity=getattr(self, "_ident", None))
-            if path.endswith("/task"):
-                out = {"taskId": out["queryId"], "state": out["state"]}
-            self._send_json(202, out)
         else:
-            self._send_json(404, {"error": "Not found",
-                                  "errorMessage": self.path,
-                                  "errorClass": None, "host": None})
+            self._error(404, "Not found", name)
 
-    def _post_resources(self, path: str, body) -> list:
-        """Resources a POST touches — native queries walk the
-        datasource tree, SQL statements name-scan the catalog (WRITE on
-        INSERT/REPLACE targets, EXTERNAL on EXTERN, STATE on sys.*),
-        Overlord submissions are datasource WRITEs."""
-        if not isinstance(body, dict):
-            return []
-        if path == "/druid/v2":
-            return native_query_resources(body)
-        if path in ("/druid/v2/sql", "/druid/v2/sql/statements",
-                    "/druid/v2/sql/task"):
-            return self._sql_res(body.get("query"))
-        if path == "/druid/v2/sql/avatica":
-            return self._sql_res(body.get("sql")) if body.get("sql") else []
-        if path == "/druid/indexer/v1/task":
-            ds = (body.get("dataSource")
-                  or body.get("spec", {}).get("dataSchema", {})
-                                         .get("dataSource")
-                  or body.get("dataSchema", {}).get("dataSource"))
-            return ([(DATASOURCE, ds, WRITE)] if ds
-                    else [(STATE, "STATE", WRITE)])
-        if path == "/druid/indexer/v1/supervisor":
-            try:
-                ds = body.get("spec", body)["dataSchema"]["dataSource"]
-                return [(DATASOURCE, ds, WRITE)]
-            except (KeyError, TypeError):
-                return [(STATE, "STATE", WRITE)]
-        if (m := re.match(r"^/druid/indexer/v1/supervisor/([^/]+)/",
-                          path + "/")):
-            return [(DATASOURCE, m.group(1), WRITE)]
-        if path.startswith("/druid/indexer/v1/"):
-            return [(STATE, "STATE", WRITE)]
-        if path.startswith("/druid/coordinator/v1/config") or \
-                path == "/druid/coordinator/v1/compaction/run" or \
-                path == "/druid/coordinator/v1/broker/config" or \
-                path.startswith("/druid/coordinator/v1/rules") or \
-                path.startswith("/druid/coordinator/v1/lookups/config") or \
-                path == "/druid/coordinator/v1/retention/run" or \
-                path.startswith("/druid-ext/basic-security/"):
-            return [(STATE, "STATE", WRITE)]
-        if (m := re.match(
-                r"^/druid/coordinator/v1/datasources/([^/]+)$", path)):
-            return [(DATASOURCE, m.group(1), WRITE)]  # markAsUsed
-        return []
+    # ---------------------------------------------------------- overlord
+    @_route("POST", "/druid/indexer/v1/task", _task_auth)
+    def _submit_task(self):
+        self._send_json(*self.server.overlord.submit(self._body))
+
+    @_route("GET", "/druid/indexer/v1/{which:" + "|".join(_TASK_LISTS) + "}",
+            _STATE_READ)
+    def _task_list(self, which):
+        self._send_json(200, self.server.overlord.tasks(_TASK_LISTS[which]))
+
+    @_route("GET", "/druid/indexer/v1/task/{tid}", _STATE_READ)
+    def _task_payload(self, tid):
+        self._send_json(*self.server.overlord.payload(tid))
+
+    @_route("GET", "/druid/indexer/v1/task/{tid}/status", _STATE_READ)
+    def _task_status(self, tid):
+        self._send_json(*self.server.overlord.status(tid))
+
+    @_route("GET", "/druid/indexer/v1/task/{tid}/reports", _STATE_READ)
+    def _task_reports(self, tid):
+        self._send_json(*self.server.overlord.reports(tid))
+
+    @_route("POST", "/druid/indexer/v1/task/{tid}/shutdown", _STATE_WRITE)
+    def _task_shutdown(self, tid):
+        self._send_json(*self.server.overlord.shutdown(tid))
+
+    @_route("POST", "/druid/indexer/v1/datasources/{ds}/shutdownAllTasks",
+            _STATE_WRITE)
+    def _datasource_tasks_shutdown(self, ds):
+        self._send_json(*self.server.overlord.shutdown_datasource(ds))
+
+    @_route("POST", "/druid/indexer/v1/supervisor", _supervisor_auth)
+    def _submit_supervisor(self):
+        self._send_json(*self.server.overlord.supervisor_submit(self._body))
+
+    @_route("GET", "/druid/indexer/v1/supervisor", _STATE_READ)
+    def _supervisors(self):
+        # SupervisorResource.specGetAll: plain → ids, ?full → specs,
+        # ?state=true → per-supervisor state summaries
+        ov = self.server.overlord
+        if "full" in self._query:
+            self._send_json(200, [
+                {"id": sid, "spec": ov.supervisor_get(sid)[1]}
+                for sid in ov.supervisor_ids()])
+        elif self._arg("state", "false").lower() == "true":
+            self._send_json(200, [
+                {"id": sid, **ov.supervisor_status(sid)[1]["payload"]}
+                for sid in ov.supervisor_ids()])
+        else:
+            self._send_json(200, ov.supervisor_ids())
+
+    @_route("GET", "/druid/indexer/v1/supervisor/{sid}", _STATE_READ)
+    def _supervisor(self, sid):
+        self._send_json(*self.server.overlord.supervisor_get(sid))
+
+    @_route("GET", "/druid/indexer/v1/supervisor/{sid}/status", _STATE_READ)
+    def _supervisor_status(self, sid):
+        self._send_json(*self.server.overlord.supervisor_status(sid))
+
+    @_route("POST", "/druid/indexer/v1/supervisor/{sid}/"
+            "{action:suspend|resume|shutdown|terminate|reset}",
+            ((DATASOURCE, "{sid}", WRITE),))
+    def _supervisor_action(self, sid, action):
+        ov = self.server.overlord
+        fn = {"suspend": ov.supervisor_suspend,
+              "resume": ov.supervisor_resume,
+              "shutdown": ov.supervisor_shutdown,
+              "terminate": ov.supervisor_shutdown,
+              "reset": ov.supervisor_reset}[action]
+        self._send_json(*fn(sid))
+
+    @_route("GET", "/druid/indexer/v1/worker", _STATE_READ)
+    def _worker_config(self):
+        # OverlordResource.getWorkerConfig (dynamic config; null until
+        # one is posted, like the reference)
+        self._send_json(200, self.server.overlord.worker_config)
+
+    @_route("POST", "/druid/indexer/v1/worker", _STATE_WRITE)
+    def _set_worker_config(self):
+        # OverlordResource.setWorkerConfig
+        self.server.overlord.worker_config = self._body
+        self._audit("worker.config", "worker.config", self._body)
+        self._send_json(200, {})
+
+    @_route("GET", "/druid/indexer/v1/worker/history", _STATE_READ)
+    def _worker_config_history(self):
+        self._history("worker.config")
+
+    def _running_tasks(self) -> list[str]:
+        return [t for t, r in self.server.overlord._tasks.items()
+                if r["state"] == "RUNNING"]
+
+    def _capacity(self) -> int:
+        return self.server.scheduler._total_cap or (os.cpu_count() or 1)
+
+    @_route("GET", "/druid/indexer/v1/workers", _STATE_READ)
+    def _workers(self):
+        # OverlordResource.getWorkers:701 — one in-process worker sized
+        # by the scheduler's slot pool
+        host, port = self.server.server_address[:2]
+        running = self._running_tasks()
+        self._send_json(200, [{
+            "worker": {"scheme": "http", "host": f"{host}:{port}",
+                       "ip": str(host), "capacity": self._capacity(),
+                       "version": __version__,
+                       "category": "_default_worker_category"},
+            "currCapacityUsed": len(running),
+            "currParallelIndexCapacityUsed": 0,
+            "availabilityGroups": [],
+            "runningTasks": running,
+            "lastCompletedTaskTime": None,
+            "blacklistedUntil": None}])
+
+    @_route("GET", "/druid/indexer/v1/totalWorkerCapacity", _STATE_READ)
+    def _total_worker_capacity(self):
+        # OverlordResource.getTotalWorkerCapacity:439 — the console's
+        # capacity gauge
+        cap = self._capacity()
+        self._send_json(200, {
+            "currentClusterCapacity": cap,
+            "usedClusterCapacity": len(self._running_tasks()),
+            "maximumCapacityWithAutoScale": cap})
+
+    # ------------------------------------- basic-security administration
+    # runtime user/role/permission management over HTTP against the
+    # wired authenticator/authorizer; every mutation is audit-logged
+    # (AuditManager analog)
+    def _sec_backend(self, kind: str):
+        """The configured instance — or None, after a 404, when it
+        doesn't support runtime administration (e.g. the allow-all
+        defaults)."""
+        if kind == "authentication":
+            be = self.server.authenticator
+            ok = hasattr(be, "create_user")
+        else:
+            be = self.server.authorizer
+            ok = hasattr(be, "create_role")
+        if ok:
+            return be
+        self._error(404, "Not found", f"no administrable {kind} backend")
+        return None
+
+    def _sec_done(self, ok: bool, action: str, fail: int = 404) -> None:
+        """Audit a successful mutation and reply 200 {}, else `fail`."""
+        if not ok:
+            return self._error(fail, "Invalid request", self._path)
+        body = (self._body if self.command == "POST"
+                and isinstance(self._body, (dict, list)) else None)
+        self._audit(self._path, "basic-security",
+                    {"action": action, "method": self.command, "body": body})
+        self._send_json(200, {})
+
+    @_route("GET", _SEC + "/users", _STATE_READ)
+    def _sec_users(self, kind, _db):
+        if (be := self._sec_backend(kind)) is not None:
+            self._send_json(200, be.user_names())
+
+    @_route("GET", _AUTHZ + "/roles", _STATE_READ)
+    def _sec_roles(self, kind, _db):
+        if (be := self._sec_backend(kind)) is not None:
+            self._send_json(200, be.role_names())
+
+    @_route("GET", _AUTHN + "/users/{user}", _STATE_READ)
+    def _sec_credentials(self, kind, _db, user):
+        if (be := self._sec_backend(kind)) is None:
+            return
+        if user not in be.users:
+            return self._error(404, "Not found", user)
+        self._send_json(200, {"username": user, "credentials":
+                              {"set": be.users[user] is not None}})
+
+    @_route("GET", _AUTHZ + "/{of:users|roles}/{name}", _STATE_READ)
+    def _sec_entry(self, kind, _db, of, name):
+        if (be := self._sec_backend(kind)) is None:
+            return
+        out = be.get_user(name) if of == "users" else be.get_role(name)
+        if out is None:
+            return self._error(404, "Not found", name)
+        self._send_json(200, out)
+
+    @_route("POST", _SEC + "/users/{user}", _STATE_WRITE)
+    def _sec_create_user(self, kind, _db, user):
+        if (be := self._sec_backend(kind)) is not None:
+            self._sec_done(be.create_user(user), "createUser", fail=400)
+
+    @_route("DELETE", _SEC + "/users/{user}", _STATE_WRITE)
+    def _sec_delete_user(self, kind, _db, user):
+        if (be := self._sec_backend(kind)) is not None:
+            self._sec_done(be.delete_user(user), "deleteUser")
+
+    @_route("POST", _AUTHN + "/users/{user}/credentials", _STATE_WRITE)
+    def _sec_set_credentials(self, kind, _db, user):
+        if (be := self._sec_backend(kind)) is None:
+            return
+        pw = (self._body or {}).get("password")
+        if not isinstance(pw, str):
+            return self._error(400, "Invalid request", "missing password")
+        self._sec_done(be.set_credentials(user, pw), "updateCredentials")
+
+    @_route("POST", _AUTHZ + "/roles/{role}", _STATE_WRITE)
+    def _sec_create_role(self, kind, _db, role):
+        if (be := self._sec_backend(kind)) is not None:
+            self._sec_done(be.create_role(role), "createRole", fail=400)
+
+    @_route("DELETE", _AUTHZ + "/roles/{role}", _STATE_WRITE)
+    def _sec_delete_role(self, kind, _db, role):
+        if (be := self._sec_backend(kind)) is not None:
+            self._sec_done(be.delete_role(role), "deleteRole")
+
+    @_route("POST", _AUTHZ + "/users/{user}/roles/{role}", _STATE_WRITE)
+    def _sec_assign_role(self, kind, _db, user, role):
+        if (be := self._sec_backend(kind)) is not None:
+            self._sec_done(be.assign_role(user, role), "assignRole")
+
+    @_route("DELETE", _AUTHZ + "/users/{user}/roles/{role}", _STATE_WRITE)
+    def _sec_unassign_role(self, kind, _db, user, role):
+        if (be := self._sec_backend(kind)) is not None:
+            self._sec_done(be.unassign_role(user, role), "unassignRole")
+
+    @_route("POST", _AUTHZ + "/roles/{role}/permissions", _STATE_WRITE)
+    def _sec_set_permissions(self, kind, _db, role):
+        if (be := self._sec_backend(kind)) is None:
+            return
+        if not isinstance(self._body, list):
+            return self._error(400, "Invalid request",
+                               "expected a permission list")
+        try:
+            self._sec_done(be.set_permissions(role, self._body),
+                           "setPermissions")
+        except ValueError as e:
+            self._error(400, "Invalid request", str(e))
 
     def _native(self, q: dict) -> None:
         ctx = dict(q.get("context") or {})
@@ -2148,7 +2107,7 @@ class _Handler(BaseHTTPRequestHandler):
             self._send_json(500, error_body("Unknown exception", e), qid)
             return
         body = json.dumps(shape_native(q, rows)).encode()
-        self._last_status, self._last_qid = 200, qid
+        self._last_qid = qid
         self.send_response(200)
         self.send_header("Content-Type", "application/json")
         self.send_header("Content-Length", str(len(body)))
@@ -2186,7 +2145,7 @@ class _Handler(BaseHTTPRequestHandler):
                 if state["aborted"]:
                     return
                 state["started"] = True
-                self._last_status, self._last_qid = 200, qid
+                self._last_qid = qid
                 self.send_response(200)
                 self.send_header("Content-Type", "application/json")
                 self.send_header("X-Druid-Query-Id", qid)

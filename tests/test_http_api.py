@@ -1042,3 +1042,56 @@ def test_concurrent_sql_shares_plan_cache(server):
     assert all(code == 200 and rows[0]["n"] == 25
                for code, rows, _ in results)
     assert server.engine.plan_cache_hits >= 1
+
+
+@pytest.mark.parametrize("path", [
+    "/druid/v2", "/druid/v2/sql", "/druid/v2/sql/statements",
+    "/druid/v2/sql/task", "/druid/indexer/v1/task",
+    "/druid/indexer/v1/supervisor", "/druid/v2/sql/avatica"])
+def test_non_object_body_is_400(server, path):
+    """Routes that read their resources from the body need a JSON
+    object: an array body is a 400 parse error, not a dropped
+    connection."""
+    status, body, _ = _post(server, path, [1, 2], expect_error=True)
+    assert status == 400 and body["error"] == "Unable to parse query"
+
+
+def test_post_ignores_query_string(server):
+    """The URL is parsed once for every verb: a query string does not
+    hide the POST route."""
+    status, rows, _ = _post(server, "/druid/v2/sql?pretty",
+                            {"query": "SELECT 1 AS one"})
+    assert status == 200 and rows == [{"one": 1}]
+
+
+def test_delete_ignores_query_string(server):
+    """DELETE /druid/v2/{queryId}?... cancels by the id alone."""
+    req = urllib.request.Request(
+        f"http://127.0.0.1:{server.port}/druid/v2/abc?x=1",
+        method="DELETE")
+    with pytest.raises(urllib.error.HTTPError) as ei:
+        urllib.request.urlopen(req)
+    assert ei.value.code == 404
+    assert json.loads(ei.value.read())["errorMessage"] == "abc"
+
+
+def test_every_route_is_request_logged(engine):
+    """Non-query endpoints get a request-log entry too, as kind http."""
+    import time
+
+    from druid_spark.server import DruidHttpServer
+    srv = DruidHttpServer(engine).start()
+    try:
+        _get(srv, "/status")
+        with pytest.raises(urllib.error.HTTPError):
+            _get(srv, "/no/such/route")
+        # the entry is written after the response goes out
+        deadline = time.time() + 5
+        while len(srv.request_logger) < 2 and time.time() < deadline:
+            time.sleep(0.01)
+        ok, missing = srv.request_logger.recent()
+        assert (ok["kind"], ok["detail"], ok["status"]) == \
+            ("http", "GET /status", 200) and ok["success"]
+        assert missing["status"] == 404 and not missing["success"]
+    finally:
+        srv.stop()

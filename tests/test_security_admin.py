@@ -6,6 +6,7 @@ tier-scoped lookups (LookupCoordinatorResource.java)."""
 
 import base64
 import json
+import re
 import urllib.error
 import urllib.request
 
@@ -18,13 +19,14 @@ def adminsrv(engine):
                                       BasicRoleBasedAuthorizer,
                                       DATASOURCE, STATE, READ, WRITE)
     from druid_spark.server import DruidHttpServer
-    auth = BasicAuthenticator({"admin": "adminpw"})
+    auth = BasicAuthenticator({"admin": "adminpw", "reader": "readerpw"})
     authz = BasicRoleBasedAuthorizer(
-        users={"admin": ["admin_role"]},
+        users={"admin": ["admin_role"], "reader": ["reader"]},
         roles={"admin_role": [(DATASOURCE, ".*", READ),
                               (DATASOURCE, ".*", WRITE),
                               (STATE, "STATE", READ),
-                              (STATE, "STATE", WRITE)]})
+                              (STATE, "STATE", WRITE)],
+               "reader": [(DATASOURCE, "region", READ)]})
     srv = DruidHttpServer(engine, authenticator=auth,
                           authorizer=authz).start()
     yield srv
@@ -118,10 +120,81 @@ def test_user_role_crud_401_to_200_transition(adminsrv):
                    {"query": "SELECT COUNT(*) AS n FROM region"},
                    user="carol", pw="cpw")
     assert code == 401
-    # non-admin may not administer security (STATE WRITE required)
+    # non-admin may not administer security (STATE WRITE required);
+    # a wrong password makes this an authentication check — see
+    # test_read_only_identity_cannot_mutate_any_body for authorization
     code, _ = _req(adminsrv, f"{AUTHN}/users/mallory", {},
                    user="admin", pw="wrong")
     assert code == 401
+
+
+def _raw(srv, method, path, data=None, user=None, pw=None):
+    """Status of a request whose body is sent verbatim."""
+    headers = {"Content-Type": "application/json"}
+    if user:
+        tok = base64.b64encode(f"{user}:{pw}".encode()).decode()
+        headers["Authorization"] = f"Basic {tok}"
+    req = urllib.request.Request(f"http://127.0.0.1:{srv.port}{path}",
+                                 data=data, headers=headers, method=method)
+    try:
+        with urllib.request.urlopen(req) as r:
+            return r.status
+    except urllib.error.HTTPError as e:
+        return e.code
+
+
+READER = dict(user="reader", pw="readerpw")
+
+
+def test_read_only_identity_cannot_mutate_any_body(adminsrv):
+    """Authorization comes from the route, not the body's shape: an
+    authenticated identity holding only DATASOURCE region READ gets 403
+    on state mutations whether the body is a list or null. (The
+    "non-admin may not administer security" check above sends a wrong
+    password, so it only covers authentication.)"""
+    grant = [{"resource": {"type": "STATE", "name": "STATE"},
+              "action": "WRITE"}]
+    for path, body in [
+            ("/druid/coordinator/v1/rules/region", [{"type": "loadForever"}]),
+            ("/druid/coordinator/v1/compaction/run", None),
+            ("/druid/coordinator/v1/retention/run", None),
+            (f"{AUTHZ}/roles/reader/permissions", grant)]:
+        code = _raw(adminsrv, "POST", path, json.dumps(body).encode(),
+                    **READER)
+        assert code == 403, (path, code)
+
+
+def _example_path(template):
+    """A concrete path for a route template: `{name}` becomes a
+    placeholder segment, `{name:a|b}` its first alternative."""
+    return re.sub(r"\{\w+(?::([^}|]+)[^}]*)?\}",
+                  lambda m: m[1] or "x", template)
+
+
+def test_route_table_requires_auth_everywhere(adminsrv):
+    """Driven by the server's own route table: every route but /status
+    and /status/health answers 401 without credentials, and every route
+    declaring a STATE or WRITE resource answers 403 to a read-only
+    identity — so routes added later keep the guarantee."""
+    from druid_spark.security import STATE, WRITE
+    from druid_spark.server import _ROUTES
+
+    open_paths, checked = set(), 0
+    for r in _ROUTES:
+        path = _example_path(r.template)
+        data = b"{}" if r.method == "POST" else None
+        if r.auth is None:
+            open_paths.add(path)
+            continue
+        code = _raw(adminsrv, r.method, path, data)
+        assert code == 401, (r.method, path, code)
+        if not callable(r.auth) and any(
+                t == STATE or a == WRITE for t, _, a in r.auth):
+            code = _raw(adminsrv, r.method, path, data, **READER)
+            assert code == 403, (r.method, path, code)
+            checked += 1
+    assert open_paths == {"/status", "/status/health"}
+    assert checked >= 60
 
 
 def test_audit_trail_for_config_mutations(adminsrv, engine):

@@ -74,6 +74,32 @@ def merged_sentinel_floors(local, seed):
     return out
 
 
+def load_sentinel_floors(out_path, seed_path):
+    """The per-core sentinel floors this run compares against, and the
+    error that kept the committed seed from loading (None if it loaded
+    or does not exist). The local floors ride in the previous
+    bench_out.json (absent on a fresh checkout, so any failure there
+    just means no local history); r14: they merge with the committed
+    quiet-host seed so a fresh checkout's first run still detects a
+    slow start — see merged_sentinel_floors. A seed that exists but
+    cannot be loaded is reported, since every slow-start verdict of
+    the run then rests on local history alone."""
+    try:
+        with open(out_path) as fh:
+            floors = (json.load(fh).get("host_noise", {})
+                      .get("sentinel_floor_sec") or {})
+        floors = {k: float(v) for k, v in floors.items()}
+    except Exception:
+        floors = {}
+    try:
+        with open(seed_path) as fh:
+            return merged_sentinel_floors(floors, json.load(fh)), None
+    except FileNotFoundError:
+        return floors, None
+    except Exception as e:
+        return floors, f"cannot load {seed_path}: {e}"
+
+
 def build_queries(engine):
     """name -> zero-arg callable returning a DataFrame (collected by
     the timer)."""
@@ -471,28 +497,12 @@ def main():
     # historical quiet-host sentinel floor in bench_out.json (keyed by
     # core count) and stamp noisy_host when the start sentinel exceeds
     # 1.5x that floor.
-    _out_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                             "bench_out.json")
-    try:
-        with open(_out_path) as fh:
-            _prev_floors = (json.load(fh).get("host_noise", {})
-                            .get("sentinel_floor_sec") or {})
-        _prev_floors = {k: float(v) for k, v in _prev_floors.items()}
-    except Exception:
-        _prev_floors = {}
-    # r14: merge with the committed quiet-host floors so a fresh
-    # checkout's first run (no bench_out.json yet) still detects a slow
-    # start — see merged_sentinel_floors
-    _floors_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                                "bench_sentinel_floors.json")
-    try:
-        with open(_floors_path) as fh:
-            _prev_floors = merged_sentinel_floors(_prev_floors,
-                                                  json.load(fh))
-    except FileNotFoundError:
-        pass
-    except Exception as e:
-        print(f"warning: cannot load {_floors_path}: {e}", file=sys.stderr)
+    _here = os.path.dirname(os.path.abspath(__file__))
+    _prev_floors, _floors_error = load_sentinel_floors(
+        os.path.join(_here, "bench_out.json"),
+        os.path.join(_here, "bench_sentinel_floors.json"))
+    if _floors_error:
+        print(f"warning: {_floors_error}", file=sys.stderr)
     _prev_floor = _prev_floors.get(str(CPUS))
 
     def _sentinel_time():
@@ -1030,6 +1040,8 @@ def main():
         "slow_start_vs_floor": slow_start,
         "noisy_host": noisy,
     }
+    if _floors_error:
+        host_noise["floors_load_error"] = _floors_error
     if host_noise["noisy_host"]:
         print(f"WARN: noisy host detected (sentinel spread "
               f"{sentinel_spread}, loadavg {loadavg_start}); this "

@@ -18,6 +18,9 @@ All stages are built-in Column expressions; no Python in the data path.
 
 from __future__ import annotations
 
+import threading
+import weakref
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -188,16 +191,19 @@ def _shingles_sql(toks_sql: str, k: int) -> str:
 _ORDERED_PAIRS_INPUT_MAX_BYTES = 256 << 20
 
 
-def _input_bytes(df: DataFrame) -> int:
-    """Total size of the local files feeding df's scan, or -1 when the
-    input is not local files (then the caller must assume small — the
-    r13 behavior)."""
+def _input_bytes(df: DataFrame) -> float:
+    """Total size of the local files feeding df's scan: 0 when there
+    are no input files (an in-memory frame — small by construction),
+    and infinity when the size is unknown (a non-`file:` URI such as
+    s3a:/hdfs:, or a file that cannot be stat'ed). An unknown size
+    must not pick the single-partition tail: remote storage is where
+    the real-scale inputs live."""
     try:
         files = df.inputFiles()
     except Exception:
-        return -1
-    if not files or not all(f.startswith("file:") for f in files):
-        return -1
+        return float("inf")
+    if not all(f.startswith("file:") for f in files):
+        return float("inf")
     import os
     from urllib.parse import unquote, urlparse
     total = 0
@@ -205,7 +211,7 @@ def _input_bytes(df: DataFrame) -> int:
         try:
             total += os.path.getsize(unquote(urlparse(f).path))
         except OSError:
-            return -1
+            return float("inf")
     return total
 
 
@@ -259,7 +265,13 @@ def _nonblank(text_col: str) -> Column:
     return F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) != "")
 
 
-_SIG_CACHE_REGISTRY: "object" = None
+# session -> {operator key: the one pinned signature frame}. The lock
+# makes each call's read-modify-write atomic: the prewarm thread and
+# threaded-server requests may make their first calls concurrently,
+# and two calls that both read "no previous frame" would both persist,
+# leaving the loser pinned for the life of the session.
+_SIG_CACHE_REGISTRY: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_SIG_CACHE_LOCK = threading.Lock()
 
 
 def _persist_scoped(df: DataFrame, key: str) -> DataFrame:
@@ -273,29 +285,22 @@ def _persist_scoped(df: DataFrame, key: str) -> DataFrame:
     (session, operator): when a new call's plan differs from the
     previous one, the previous cache is dropped. Same-plan calls keep
     the shared cache entry, so bench/oracle behavior is unchanged."""
-    global _SIG_CACHE_REGISTRY
-    if _SIG_CACHE_REGISTRY is None:
-        import weakref
-        _SIG_CACHE_REGISTRY = weakref.WeakKeyDictionary()
-    spark = df.sparkSession
-    reg = _SIG_CACHE_REGISTRY.get(spark)
-    if reg is None:
-        reg = {}
-        _SIG_CACHE_REGISTRY[spark] = reg
-    prev = reg.get(key)
-    out = df.persist()
-    if prev is not None:
-        try:
-            same = prev._jdf.queryExecution().analyzed().sameResult(
-                out._jdf.queryExecution().analyzed())
-        except Exception:
-            same = False
-        if not same:
+    with _SIG_CACHE_LOCK:
+        reg = _SIG_CACHE_REGISTRY.setdefault(df.sparkSession, {})
+        prev = reg.get(key)
+        out = df.persist()
+        if prev is not None:
             try:
-                prev.unpersist()
+                same = prev._jdf.queryExecution().analyzed().sameResult(
+                    out._jdf.queryExecution().analyzed())
             except Exception:
-                pass
-    reg[key] = out
+                same = False
+            if not same:
+                try:
+                    prev.unpersist()
+                except Exception:
+                    pass
+        reg[key] = out
     return out
 
 

@@ -38,6 +38,7 @@ import itertools as _it
 import threading as _threading
 import weakref as _weakref
 from collections import OrderedDict
+from types import MappingProxyType
 _ENGINE_SERIAL = _it.count(1)
 _SYS_DOT_RE = _re.compile(
     r"\bsys\.(tasks|segments|servers|server_segments|supervisors)\b",
@@ -202,6 +203,9 @@ class DruidSparkEngine:
         self.plan_cache_size = 64
         self.plan_cache_hits = 0
         self.plan_cache_misses = 0  # recompute counter (tests)
+        # (catalog.version, {referenced tables: SqlSchema}) — see
+        # _sql_schema
+        self._sql_schemas: tuple[int, dict] = (-1, {})
         # task log feeding the sys.tasks view (SystemSchema TASKS
         # signature, reduced): async SQL statements (server.py) and
         # SQL-ingest tasks record themselves here
@@ -601,63 +605,20 @@ class DruidSparkEngine:
             exact = set_ctx["useApproximateCountDistinct"].lower() != "true"
         if "APPEND" in text.upper():
             text = self._rewrite_table_append(text)
-        # unambiguous SCALAR column names across registered tables:
-        # Druid's array/MV family auto-wraps string scalars as
-        # 1-element MVDs, which the rewriter can only do knowing the
-        # column isn't already an array (qaUnnest array_length(c_long))
         from druid_spark.security import sql_resources
         ref_tables = {n for rt, n, _a in sql_resources(
             self.catalog.tables(), text) if rt == "DATASOURCE"}
-        scalar_cols, array_cols, array_elem, scalar_types = \
-            self._scalar_array_cols(ref_tables or None)
-        # the _json_cols-derived hint sets scope to the query's
-        # referenced tables the same way _scalar_array_cols does — an
-        # unrelated table's same-named MVD/COMPLEX column must not
-        # drive the MVD explode or COMPLEX rejection rewrites for a
-        # scalar column of the referenced table
-        _jc_by_table = self.catalog._json_cols
-        _known = set(self.catalog.tables())
-        if ref_tables and ref_tables & _known:
-            _jc_by_table = {t: cols for t, cols in _jc_by_table.items()
-                            if t in ref_tables}
-        json_cols = {c for cols in _jc_by_table.values()
-                     for c, ty in cols.items()
-                     if ty not in ("MVD", "AUTO")}
-        mvd_cols = {c for cols in _jc_by_table.values()
-                    for c, ty in cols.items() if ty == "MVD"}
-        # schema-discovered ("auto") scalar columns: variant-capable,
-        # so MV functions stringify them instead of nulling like a
-        # DECLARED numeric dim
-        auto_scalars = {c for cols in _jc_by_table.values()
-                        for c, ty in cols.items() if ty == "AUTO"}
-        # REAL typed arrays (not MVDs): numeric/bool element types can
-        # never be MVDs (MVDs are VARCHAR), plus variant arrays the
-        # catalog marked "ARRAY". Scalar string functions and IN over
-        # these reject like the reference's Calcite validator; string-
-        # element arrays stay ambiguous with MVDs (both store as
-        # array<string>) and are deliberately not guarded.
-        real_arrays = {c for c, et in array_elem.items()
-                       if et and not et.split("(")[0] in
-                       ("string", "varchar", "char")}
-        real_arrays |= {c for jc in _jc_by_table.values()
-                        for c, ty in jc.items() if ty == "ARRAY"}
         final = rewrite_druid_sql(
             text, exact=exact, tz=set_ctx.get("sqlTimeZone", "UTC"),
+            schema=self._sql_schema(ref_tables),
+            default_nominal_entries=self.sketch_default_nominal_entries,
+            hllc_parity=self.hyperunique_parity,
             # extendedFilteredSumRewrite context flag (filtered_sum.iq
             # !set): false keeps SUM(CASE..ELSE 0) un-filtered (0 for
             # a no-match group instead of NULL)
             filtered_sum_rewrite=set_ctx.get(
                 "extendedFilteredSumRewrite", "true").lower()
                 != "false",
-            default_nominal_entries=self.sketch_default_nominal_entries,
-            scalar_cols=scalar_cols - array_cols, json_cols=json_cols,
-            array_elem=array_elem, scalar_types=scalar_types,
-            real_array_cols=real_arrays, mvd_cols=mvd_cols,
-            variant_array_cols={
-                c for cols in _jc_by_table.values()
-                for c, ty in cols.items() if ty == "ARRAY"},
-            hllc_parity=self.hyperunique_parity,
-            auto_scalar_cols=auto_scalars,
             # context.decoupledUnnestFilterCollapse (default off):
             # opt-in reproduction of the reference's decoupled-planner
             # unnest virtual-column naming collision (see
@@ -669,26 +630,7 @@ class DruidSparkEngine:
             # (DruidSqlValidator.java:138-170) instead of answering
             # them as a capability superset
             strict_window_frames=set_ctx.get(
-                "strictWindowFrames", "").lower() == "true",
-            # ordered per-table column lists for the self-join star
-            # expansion (Calcite's 0-suffix duplicate naming)
-            table_columns={
-                t: [n for n, _ty in cols]
-                for t, cols in self._col_kind_cache[1].items()
-                if not ref_tables or t in ref_tables},
-            # typed per-table map for the UNION branch alignment
-            # (MVD tags override the storage type)
-            table_col_types={
-                t: {n: ("MVD" if _jc_by_table.get(t, {}).get(n)
-                        == "MVD" else ty) for n, ty in cols}
-                for t, cols in self._col_kind_cache[1].items()
-                if not ref_tables or t in ref_tables},
-            # DECLARED COMPLEX<json> dims reject LIKE (Calcite); a
-            # discovery-stored json TEXT column ("JSON_TEXT" hint)
-            # stays LIKE-able (qaJsonCols ingest_schmless I14-I17)
-            declared_json_cols={
-                c for cols in _jc_by_table.values()
-                for c, ty in cols.items() if ty == "COMPLEX<json>"})
+                "strictWindowFrames", "").lower() == "true")
         # `SET useResultCache = true;` — the SQL spelling of the
         # result-level cache (reference: ResultLevelCachingQueryRunner
         # applies to SQL through the same query stack). Keyed on the
@@ -696,11 +638,8 @@ class DruidSparkEngine:
         # referenced datasource (no interval structure to narrow by at
         # the SQL layer), so any table change invalidates.
         def tables_fp() -> str:
-            from druid_spark.security import sql_resources
-            tables = sorted({n for rt, n, _a in sql_resources(
-                self.catalog.tables(), text) if rt == "DATASOURCE"})
             return ";".join(f"{n}={self._table_fingerprint(n, None)}"
-                            for n in tables)
+                            for n in sorted(ref_tables))
 
         if set_ctx.get("useResultCache", "").lower() == "true":
             key = ("sql||" + final + f"||exact={exact}||"
@@ -722,56 +661,53 @@ class DruidSparkEngine:
             lambda: (f"plansql||{final}||exact={exact}||"
                      f"cv={self.catalog.version}||" + tables_fp()))
 
-    def _scalar_array_cols(self, tables: set | None = None
-                           ) -> tuple[set, set, dict, dict]:
-        """Column-name → scalar/array classification merged over
-        `tables` (default: every registered table), with the per-table
-        schemas cached per catalog version.  Scoping to the tables a
-        query actually references keeps an unrelated table's
-        same-named numeric column from polluting the TIME_*
-        numeric-argument guard (a false rejection, not validation).
-        Uses catalog.schema() (footer-only for pending tables) so the
-        SQL execute path never force-materializes lazily-registered
-        parquet tables, and a bad registration is skipped per-table
-        instead of aborting the scan (which used to silently disable
-        the scalar auto-wrap for ALL tables and re-attempt the failed
-        read on every query)."""
-        cached = getattr(self, "_col_kind_cache", None)
-        if cached is None or cached[0] != self.catalog.version:
-            per: dict = {}
-            for t in self.catalog.tables():
-                try:
-                    fields = self.catalog.schema(t).fields
-                except Exception:
-                    continue
-                per[t] = [(f.name, f.dataType.simpleString())
-                          for f in fields]
-            cached = (self.catalog.version, per)
-            self._col_kind_cache = cached
-        per = cached[1]
-        names = (per.keys() if tables is None
-                 else [t for t in tables if t in per]) or per.keys()
+    def _sql_schema(self, ref_tables: set[str]):
+        """The rewrite's SqlSchema for a statement that references
+        `ref_tables`: the referenced tables if any, else every table.
+        Scoping keeps an unrelated table's same-named column from
+        driving a rewrite (e.g. a false TIME_* numeric-argument
+        rejection, or the MVD explode / COMPLEX rejection for a
+        scalar column of the referenced table). Uses catalog.schema()
+        (footer-only for pending tables) so the SQL path never
+        force-materializes lazily-registered parquet tables, and a bad
+        registration is skipped per table.
+
+        Cached per (catalog.version, referenced tables). The cache
+        holds only the current version's entries and is replaced in
+        one assignment, so concurrent server threads need no lock: a
+        lost race only rebuilds an entry."""
+        from druid_spark.functions.sqlshim import SqlSchema
+        version, key = self.catalog.version, frozenset(ref_tables)
+        cached_version, entries = self._sql_schemas
+        if cached_version == version and key in entries:
+            return entries[key]
+        tables = self.catalog.tables()
+        scope = [t for t in tables if t in key] or tables
+        hints = {t: self.catalog._json_cols.get(t, {}) for t in scope}
+        per: dict[str, list[tuple[str, str]]] = {}
+        for t in scope:
+            try:
+                fields = self.catalog.schema(t).fields
+            except Exception:
+                continue
+            per[t] = [(f.name, f.dataType.simpleString())
+                      for f in fields]
         scalar: set = set()
         arr: set = set()
         elem: dict = {}
         stypes: dict = {}
         ambiguous: set = set()
         s_ambiguous: set = set()
-        for t in names:
-            for cname, s in per[t]:
+        for cols in per.values():
+            for cname, s in cols:
                 if s.startswith("array"):
                     arr.add(cname)
-                    # element type for the cross-type comparison
-                    # coercion; names with conflicting element types
-                    # across tables are dropped (ambiguous)
                     et = s[6:-1] if s.startswith("array<") else ""
                     if elem.get(cname, et) != et:
                         ambiguous.add(cname)
                     elem[cname] = et
                 else:
                     scalar.add(cname)
-                    # scalar type map (the TIME_* numeric-argument
-                    # rejection); ambiguous names dropped
                     if stypes.get(cname, s) != s:
                         s_ambiguous.add(cname)
                     stypes[cname] = s
@@ -779,7 +715,36 @@ class DruidSparkEngine:
             elem.pop(a, None)
         for a in s_ambiguous:
             stypes.pop(a, None)
-        return scalar, arr, elem, stypes
+        tags = [(c, ty) for cols in hints.values() for c, ty in cols.items()]
+
+        def tagged(*types: str) -> frozenset:
+            return frozenset(c for c, ty in tags if ty in types)
+
+        variant_arrays = tagged("ARRAY")
+        schema = SqlSchema(
+            scalar_cols=frozenset(scalar - arr),
+            json_cols=frozenset(c for c, ty in tags
+                                if ty not in ("MVD", "AUTO")),
+            array_elem=MappingProxyType(elem),
+            scalar_types=MappingProxyType(stypes),
+            real_array_cols=variant_arrays | {
+                c for c, et in elem.items()
+                if et and et.split("(")[0] not in
+                ("string", "varchar", "char")},
+            mvd_cols=tagged("MVD"),
+            variant_array_cols=variant_arrays,
+            auto_scalar_cols=tagged("AUTO"),
+            declared_json_cols=tagged("COMPLEX<json>"),
+            table_columns=MappingProxyType({
+                t: tuple(n for n, _ty in cols) for t, cols in per.items()}),
+            table_col_types=MappingProxyType({
+                t: MappingProxyType({
+                    n: "MVD" if hints[t].get(n) == "MVD" else ty
+                    for n, ty in cols})
+                for t, cols in per.items()}))
+        fresh = entries if cached_version == version else {}
+        self._sql_schemas = (version, {**fresh, key: schema})
+        return schema
 
     def _rewrite_table_append(self, text: str) -> str:
         """TABLE(APPEND('ds1', 'ds2', ...)) → a UNION ALL subquery

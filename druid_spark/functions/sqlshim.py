@@ -16,61 +16,108 @@ from __future__ import annotations
 
 import contextvars
 import re
+from dataclasses import dataclass, field
+from typing import Mapping
 
-# Session default for sketch nominalEntries, set for the duration of one
-# rewrite_druid_sql call (ContextVar: concurrent server threads rewriting
-# different sessions' SQL never see each other's default). The reference
-# bounds tuple/theta sketch state at its DEFAULT nominal entries even when
-# the query omits the parameter (extensions-core/datasketches/.../
-# ArrayOfDoublesSketchAggregatorFactory.java); None = exact unbounded
-# state, the oracle-checkable mode differential harnesses require.
-_DEFAULT_NOM: contextvars.ContextVar[int | None] = contextvars.ContextVar(
-    "druid_spark_default_nominal_entries", default=None)
-# unambiguous non-array column names of the calling engine's tables
-# (the array/MV family auto-wraps string scalars as 1-element MVDs)
-_SCALAR_COLS: contextvars.ContextVar[set] = contextvars.ContextVar(
-    "druid_spark_scalar_cols", default=set())
-# column names typed COMPLEX<json> in the calling engine's catalog:
-# JSON-text columns embed as STRUCTURE (not quoted strings) in
-# JSON_OBJECT and friends (qaJsonCols func_json_object goldens)
-_JSON_COLS: contextvars.ContextVar[set] = contextvars.ContextVar(
-    "druid_spark_json_cols", default=set())
-# unambiguous array-column name → element type simpleString, for the
-# cross-type array comparison coercion (Druid/Calcite compares
-# ARRAY<LONG> to ARRAY<STRING> via leastRestrictive; Spark raises
-# DATATYPE_MISMATCH.BINARY_OP_DIFF_TYPES — qaArray FILLER batteries)
-_ARRAY_ELEM: contextvars.ContextVar[dict] = contextvars.ContextVar(
-    "druid_spark_array_elem", default={})
-# unambiguous scalar-column name → type simpleString: the TIME_*
-# family REJECTS numeric arguments like the reference's Calcite
-# validator (a bigint fed to TIME_EXTRACT would silently read as
-# epoch SECONDS here while Druid reads native millis — erroring
-# matches the reference and prevents the silent misread)
-_REAL_ARRAYS: contextvars.ContextVar[set] = contextvars.ContextVar(
-    "druid_spark_real_array_cols", default=set())
-_MVD_COLS: contextvars.ContextVar[set] = contextvars.ContextVar(
-    "druid_spark_mvd_cols", default=set())
-_HLLC_PARITY: contextvars.ContextVar[bool] = contextvars.ContextVar(
-    "druid_spark_hllc_parity", default=False)
-_TABLE_COLS: contextvars.ContextVar[dict] = contextvars.ContextVar(
-    "druid_spark_table_cols", default={})
-_DECLARED_JSON: contextvars.ContextVar[set] = contextvars.ContextVar(
-    "druid_spark_declared_json_cols", default=set())
-_VARRAYS: contextvars.ContextVar[set] = contextvars.ContextVar(
-    "druid_spark_variant_array_cols", default=set())
-_SCALAR_TYPES: contextvars.ContextVar[dict] = contextvars.ContextVar(
-    "druid_spark_scalar_types", default={})
-# schema-discovered ("auto") scalar columns: variant-capable, so the
-# MV family stringifies them where a DECLARED numeric dim yields NULL
-# (qaUnnest array_sql vs mv_sql array_to_mv goldens)
-_AUTO_SCALARS: contextvars.ContextVar[set] = contextvars.ContextVar(
-    "druid_spark_auto_scalar_cols", default=set())
-# per-table column type map {table: {col: "MVD" | spark simpleString}}
-# for the UNION branch alignment (the reference's table-level union
-# maps same-named columns leniently; a pass-through MVD vs scalar
-# conflict coerces to the MVD's published VARCHAR form)
-_TABLE_COL_TYPES: contextvars.ContextVar[dict] = contextvars.ContextVar(
-    "druid_spark_table_col_types", default={})
+
+@dataclass(frozen=True)
+class SqlSchema:
+    """The calling engine's schema as the rewrite sees it: column-name
+    hints derived from the catalog, scoped to the tables a statement
+    references (every table when it references none, so an unrelated
+    table's same-named column cannot drive a rewrite for the
+    referenced one). Built and cached per catalog version by
+    DruidSparkEngine._sql_schema; never mutated, so concurrent
+    rewrites share one instance."""
+    # unambiguous non-array column names of the calling engine's tables
+    # (the array/MV family auto-wraps string scalars as 1-element MVDs,
+    # which needs to know the column isn't already an array — qaUnnest
+    # array_length(c_long)); a name that is an array in any scoped
+    # table is not listed
+    scalar_cols: frozenset[str] = frozenset()
+    # column names typed COMPLEX<json> in the calling engine's catalog:
+    # JSON-text columns embed as STRUCTURE (not quoted strings) in
+    # JSON_OBJECT and friends (qaJsonCols func_json_object goldens);
+    # every catalog type hint except MVD and AUTO
+    json_cols: frozenset[str] = frozenset()
+    # unambiguous array-column name → element type simpleString, for the
+    # cross-type array comparison coercion (Druid/Calcite compares
+    # ARRAY<LONG> to ARRAY<STRING> via leastRestrictive; Spark raises
+    # DATATYPE_MISMATCH.BINARY_OP_DIFF_TYPES — qaArray FILLER batteries);
+    # names with conflicting element types across tables are dropped
+    array_elem: Mapping[str, str] = field(default_factory=dict)
+    # unambiguous scalar-column name → type simpleString: the TIME_*
+    # family REJECTS numeric arguments like the reference's Calcite
+    # validator (a bigint fed to TIME_EXTRACT would silently read as
+    # epoch SECONDS here while Druid reads native millis — erroring
+    # matches the reference and prevents the silent misread); names
+    # with conflicting types across tables are dropped
+    scalar_types: Mapping[str, str] = field(default_factory=dict)
+    # REAL typed arrays (not MVDs): numeric/bool element types can
+    # never be MVDs (MVDs are VARCHAR), plus variant arrays the
+    # catalog marked "ARRAY". Scalar string functions and IN over
+    # these reject like the reference's Calcite validator; string-
+    # element arrays stay ambiguous with MVDs (both store as
+    # array<string>) and are deliberately not guarded.
+    real_array_cols: frozenset[str] = frozenset()
+    # columns the catalog tags MVD (multi-value string dims, stored as
+    # array<string>)
+    mvd_cols: frozenset[str] = frozenset()
+    # variant-element array columns the catalog tags "ARRAY"
+    variant_array_cols: frozenset[str] = frozenset()
+    # schema-discovered ("auto") scalar columns: variant-capable, so the
+    # MV family stringifies them where a DECLARED numeric dim yields NULL
+    # (qaUnnest array_sql vs mv_sql array_to_mv goldens)
+    auto_scalar_cols: frozenset[str] = frozenset()
+    # DECLARED COMPLEX<json> dims reject LIKE (Calcite); a
+    # discovery-stored json TEXT column ("JSON_TEXT" hint) stays
+    # LIKE-able (qaJsonCols ingest_schmless I14-I17)
+    declared_json_cols: frozenset[str] = frozenset()
+    # ordered per-table column lists for the self-join star expansion
+    # (Calcite's 0-suffix duplicate naming)
+    table_columns: Mapping[str, tuple[str, ...]] = field(
+        default_factory=dict)
+    # per-table column type map {table: {col: "MVD" | spark simpleString}}
+    # for the UNION branch alignment (the reference's table-level union
+    # maps same-named columns leniently; a pass-through MVD vs scalar
+    # conflict coerces to the MVD's published VARCHAR form); MVD tags
+    # override the storage type
+    table_col_types: Mapping[str, Mapping[str, str]] = field(
+        default_factory=dict)
+
+
+@dataclass(frozen=True)
+class _RewriteCtx:
+    """Everything one rewrite_druid_sql call reads besides the SQL
+    text, exact and tz: the schema plus the statement flags. Held in
+    one ContextVar, so concurrent server threads rewriting different
+    sessions' SQL never see each other's."""
+    schema: SqlSchema = SqlSchema()
+    # Session default for sketch nominalEntries. The reference bounds
+    # tuple/theta sketch state at its DEFAULT nominal entries even when
+    # the query omits the parameter (extensions-core/datasketches/.../
+    # ArrayOfDoublesSketchAggregatorFactory.java); None = exact
+    # unbounded state, the oracle-checkable mode differential
+    # harnesses require.
+    default_nominal_entries: int | None = None
+    # approximate count distinct estimates through the reference-exact
+    # HyperLogLogCollector reproduction (functions/hllc.py)
+    hllc_parity: bool = False
+    # extendedFilteredSumRewrite: SUM(CASE WHEN c THEN x ELSE 0 END)
+    # becomes a filtered SUM (NULL for a no-match group)
+    filtered_sum_rewrite: bool = True
+    # decoupledUnnestFilterCollapse (see _decoupled_unnest_filter_collapse)
+    unnest_filter_collapse: bool = False
+    # strictWindowFrames (see _strict_window_frames_check)
+    strict_window_frames: bool = False
+
+
+_CTX: contextvars.ContextVar[_RewriteCtx] = contextvars.ContextVar(
+    "druid_spark_rewrite_ctx", default=_RewriteCtx())
+
+
+def _schema() -> SqlSchema:
+    return _CTX.get().schema
 
 
 def _skip_string(s: str, i: int) -> int:
@@ -126,12 +173,6 @@ def _unmask_strings(sql: str, lits: dict[int, str]) -> str:
                   lambda m: lits.get(int(m.group(1)), m.group(0)), sql)
 
 
-_FILTERED_SUM: contextvars.ContextVar[bool] = contextvars.ContextVar(
-    "druid_spark_filtered_sum_rewrite", default=True)
-_UNNEST_COLLAPSE: contextvars.ContextVar[bool] = contextvars.ContextVar(
-    "druid_spark_unnest_filter_collapse", default=False)
-_STRICT_WINDOW: contextvars.ContextVar[bool] = contextvars.ContextVar(
-    "druid_spark_strict_window_frames", default=False)
 _MASK = contextvars.ContextVar("druid_spark_mask_ctx", default=None)
 
 # a placeholder token, for patterns that must match where a user
@@ -307,11 +348,11 @@ def _fold_notnull_is_null(out: str) -> str:
         r"(?is)(?<![\w.])([A-Za-z_]\w*)\s+IS\s+(?:NOT\s+)?NULL", out)}
     if not refs:
         return out
-    scalars = _SCALAR_COLS.get() | set().union(
-        *(_TABLE_COLS.get().values() or [set()]))
+    scalars = _schema().scalar_cols | set().union(
+        *(_schema().table_columns.values() or [set()]))
     for alias in refs:
-        if alias in scalars or alias in _REAL_ARRAYS.get() \
-                or alias in _MVD_COLS.get():
+        if alias in scalars or alias in _schema().real_array_cols \
+                or alias in _schema().mvd_cols:
             continue  # a real column of this name exists — too risky
         defs = list(re.finditer(
             rf"(?is)\bAS\s+({alias})(?![\w$])", out))
@@ -404,7 +445,7 @@ def _union_mvd_alignment(out: str) -> str:
     string form in every branch — but ONLY when the column is never
     referenced outside the union subquery (a referenced conflict IS
     an error in the reference too: case 9 MAX(dim3))."""
-    tct = _TABLE_COL_TYPES.get()
+    tct = _schema().table_col_types
     if not tct or not re.search(r"(?is)\bUNION\s+ALL\b", out):
         return out
     if not any(k == "MVD" for cols in tct.values()
@@ -850,14 +891,15 @@ _TDW = re.compile(r"(?is)^\s*DS_TUPLE_DOUBLES\s*\((.*)\)\s*$")
 def _tuple_args(a: str) -> tuple[list[str], int | None] | None:
     """DS_TUPLE_DOUBLES(key, m1..mn[, nominalEntries]) ->
     ([key, m1..], nominalEntries-or-None). No explicit nominalEntries
-    falls back to the session default (_DEFAULT_NOM — None in exact /
-    oracle sessions = exact unbounded state; see
+    falls back to the session default
+    (_RewriteCtx.default_nominal_entries — None in exact / oracle
+    sessions = exact unbounded state; see
     aggregations.tuple_map_state)."""
     m = _TDW.match(a)
     if not m:
         return None
     xs = _top_split(m.group(1))
-    cap = _DEFAULT_NOM.get()
+    cap = _CTX.get().default_nominal_entries
     if len(xs) > 1 and re.fullmatch(r"\d+", xs[-1].strip()):
         cap = max(2, int(xs[-1]))
         xs = xs[:-1]
@@ -1349,7 +1391,7 @@ def _mv_elem_coerce(scalar: str, arr: str) -> str:
     array1Type): mv_prepend('A', a_bool) over a LONG array yields a
     NULL element (qaArray ops_funcs_mv_funcs B10 pins
     [null,"1","0",null])."""
-    et = _ARRAY_ELEM.get().get(arr.strip(), "").split("(")[0].lower()
+    et = _schema().array_elem.get(arr.strip(), "").split("(")[0].lower()
     if not et:
         # json_value(... RETURNING t array) carries its element type
         # into the rewritten FROM_JSON(..., 'array<t>') schema —
@@ -1405,7 +1447,7 @@ def _agg_size_guard(body: str, expr: str, cap: int) -> str:
     Growth is monotone, so checking the final collection is
     equivalent to the reference's per-step check."""
     base = re.sub(r"^[A-Za-z_]\w*\.", "", expr.strip())
-    t = _SCALAR_TYPES.get().get(base, "").split("(")[0].lower()
+    t = _schema().scalar_types.get(base, "").split("(")[0].lower()
     is_string = (t in ("varchar", "string", "char", "text")
                  or re.fullmatch(_PH, expr.strip()) is not None)
     szfn = ("(__a, __x) -> __a + IF(__x IS NULL, 1L, "
@@ -1490,7 +1532,7 @@ def _hll_parity_input(a: str) -> str:
     org.apache.datasketches.hll.HllSketch in
     tests/test_sketches.py)."""
     e = a.strip()
-    t = _SCALAR_TYPES.get().get(e, "").split("(")[0].lower()
+    t = _schema().scalar_types.get(e, "").split("(")[0].lower()
     if t in ("tinyint", "smallint", "int", "integer", "bigint", "long"):
         return f"CAST({e} AS BIGINT)"
     if t in ("float", "double", "real"):
@@ -1823,7 +1865,7 @@ def _unnest_elem_semantics(out: str) -> str:
     # '0.1'/2 as doubles (qaUnnest mv_sql_ops A1_B4 pins the long
     # results). Guard against a preceding same-precedence operator
     # (left-associativity, as in the provably-long chain rewrite).
-    _ltypes = {c for c, t in _SCALAR_TYPES.get().items()
+    _ltypes = {c for c, t in _schema().scalar_types.items()
                if t.split("(")[0].lower() in
                ("bigint", "int", "integer", "smallint", "tinyint",
                 "long")}
@@ -2183,65 +2225,26 @@ def _dq_idents_to_backticks(sql: str) -> str:
 
 def rewrite_druid_sql(sql: str, exact: bool = True,
                       tz: str = "UTC",
+                      schema: SqlSchema = SqlSchema(),
                       default_nominal_entries: int | None = None,
-                      scalar_cols: set[str] | None = None,
-                      json_cols: set[str] | None = None,
-                      array_elem: dict | None = None,
-                      scalar_types: dict | None = None,
-                      real_array_cols: set | None = None,
-                      mvd_cols: set | None = None,
-                      variant_array_cols: set | None = None,
                       hllc_parity: bool = False,
-                      table_columns: dict | None = None,
-                      declared_json_cols: set | None = None,
                       filtered_sum_rewrite: bool = True,
-                      table_col_types: dict | None = None,
-                      auto_scalar_cols: set | None = None,
                       unnest_filter_collapse: bool = False,
                       strict_window_frames: bool = False) -> str:
-    """default_nominal_entries: session default bound for sketch state
-    when a query omits nominalEntries (the reference's default bounds;
-    ArrayOfDoublesSketchAggregatorFactory.java). None = exact unbounded
-    — required by the DuckDB-differential harnesses and exact engines.
-    scalar_cols: unambiguous non-array column names of the session's
-    tables, for the array-family scalar auto-wrap.
-    json_cols: column names typed COMPLEX<json> (stored as JSON text) —
-    they embed as structure in JSON_OBJECT."""
-    tok = _DEFAULT_NOM.set(default_nominal_entries)
-    tok2 = _SCALAR_COLS.set(scalar_cols or set())
-    tok3 = _JSON_COLS.set(json_cols or set())
-    tok4 = _ARRAY_ELEM.set(array_elem or {})
-    tok5 = _SCALAR_TYPES.set(scalar_types or {})
-    tok6 = _REAL_ARRAYS.set(real_array_cols or set())
-    tok7 = _MVD_COLS.set(mvd_cols or set())
-    tok8 = _VARRAYS.set(variant_array_cols or set())
-    tok9 = _HLLC_PARITY.set(hllc_parity)
-    tok_fsr = _FILTERED_SUM.set(filtered_sum_rewrite)
-    tok10 = _TABLE_COLS.set(table_columns or {})
-    tok11 = _DECLARED_JSON.set(declared_json_cols or set())
-    tok12 = _TABLE_COL_TYPES.set(table_col_types or {})
-    tok13 = _AUTO_SCALARS.set(auto_scalar_cols or set())
-    tok14 = _UNNEST_COLLAPSE.set(unnest_filter_collapse)
-    tok15 = _STRICT_WINDOW.set(strict_window_frames)
+    """Rewrite one Druid SQL statement to Spark SQL. schema: the
+    calling engine's column hints (the default knows no columns); the
+    remaining keywords are the statement flags documented on
+    _RewriteCtx. default_nominal_entries None = exact unbounded sketch
+    state — required by the DuckDB-differential harnesses and exact
+    engines."""
+    tok = _CTX.set(_RewriteCtx(
+        schema, default_nominal_entries, hllc_parity,
+        filtered_sum_rewrite, unnest_filter_collapse,
+        strict_window_frames))
     try:
         return _rewrite_druid_sql(sql, exact, tz)
     finally:
-        _STRICT_WINDOW.reset(tok15)
-        _UNNEST_COLLAPSE.reset(tok14)
-        _AUTO_SCALARS.reset(tok13)
-        _TABLE_COL_TYPES.reset(tok12)
-        _DECLARED_JSON.reset(tok11)
-        _TABLE_COLS.reset(tok10)
-        _HLLC_PARITY.reset(tok9)
-        _FILTERED_SUM.reset(tok_fsr)
-        _VARRAYS.reset(tok8)
-        _MVD_COLS.reset(tok7)
-        _REAL_ARRAYS.reset(tok6)
-        _DEFAULT_NOM.reset(tok)
-        _SCALAR_COLS.reset(tok2)
-        _JSON_COLS.reset(tok3)
-        _ARRAY_ELEM.reset(tok4)
-        _SCALAR_TYPES.reset(tok5)
+        _CTX.reset(tok)
 
 
 def _find_spec_end(sql: str, start: int) -> int:
@@ -2559,7 +2562,7 @@ def _coerce_array_comparisons(sql: str) -> str:
     render of booleans), then numeric-vs-string → both ARRAY<STRING>.
     Only fires when at least one side is a KNOWN array column — plain
     scalar comparisons never match."""
-    elems = _ARRAY_ELEM.get()
+    elems = _schema().array_elem
     if not elems:
         return sql
     masked, lits = _mask_local(sql)
@@ -3224,10 +3227,12 @@ def _rewrite_druid_sql_masked(out: str, exact: bool, tz: str) -> str:
     assert "'" not in out, \
         "unmasked string literal reached the rewrite pipeline body"
     # quirk flag: must see the pre-rewrite UNNEST spellings
-    if _UNNEST_COLLAPSE.get() and re.search(r"(?is)\bUNNEST\s*\(", out):
+    flags = _CTX.get()
+    if flags.unnest_filter_collapse and re.search(
+            r"(?is)\bUNNEST\s*\(", out):
         out = _decoupled_unnest_filter_collapse(out)
     # strict-refusal compat mode: must see the pre-rewrite frames
-    if _STRICT_WINDOW.get() and re.search(r"(?is)\bOVER\b", out):
+    if flags.strict_window_frames and re.search(r"(?is)\bOVER\b", out):
         _strict_window_frames_check(out)
     # Scalar string/IP/parse functions over a REAL ARRAY argument are
     # Calcite validation errors in the reference ("Cannot apply 'FN'
@@ -3345,7 +3350,7 @@ def _rewrite_druid_sql_masked(out: str, exact: bool, tz: str) -> str:
                 # other literal THENs are outside the rule — keep the
                 # CASE (0 for a no-match group)
                 continue
-            elif _FILTERED_SUM.get():
+            elif _CTX.get().filtered_sum_rewrite:
                 _rep = (f"SUM({_then}) "
                         f"FILTER (WHERE {_m.group(1)})")
             else:
@@ -3422,7 +3427,7 @@ def _rewrite_druid_sql_masked(out: str, exact: bool, tz: str) -> str:
     #   position (A033/A035) but keeps the two-valued string compare
     #   as a FILTER (A036 `WHERE c1 NOT IN ...` counts all rows) —
     #   context decided by the nearest preceding clause keyword
-    _djson = {c.lower() for c in _DECLARED_JSON.get()}
+    _djson = {c.lower() for c in _schema().declared_json_cols}
     if _djson:
         _jpat = "|".join(map(re.escape, sorted(_djson)))
         _jref = rf"(?:[A-Za-z_]\w*\.)?(?:{_jpat})"
@@ -3470,7 +3475,7 @@ def _rewrite_druid_sql_masked(out: str, exact: bool, tz: str) -> str:
     # engine's coercing match would wrongly hit '1'.
     if re.search(r"(?is)\b(?:MV|ARRAY)_(?:OFFSET|ORDINAL)_OF\s*\(",
                  out):
-        _vcols = {c.lower() for c in _VARRAYS.get()}
+        _vcols = {c.lower() for c in _schema().variant_array_cols}
         _vpat = "|".join(map(re.escape, sorted(_vcols))) or "__none__"
         out = re.sub(
             rf"(?is)\b(?:MV|ARRAY)_(?:OFFSET|ORDINAL)_OF\s*\(\s*"
@@ -3495,12 +3500,12 @@ def _rewrite_druid_sql_masked(out: str, exact: bool, tz: str) -> str:
         head = re.match(r"[A-Za-z_]\w*", e)
         if head and head.group(0).lower() in _shadowed:
             return False
-        if head and head.group(0) in (_JSON_COLS.get()
-                                      - _REAL_ARRAYS.get()) and (
+        if head and head.group(0) in (_schema().json_cols
+                                      - _schema().real_array_cols) and (
                 head.group(0) == e or re.fullmatch(
                     r"(?is)[A-Za-z_]\w*\s+TO\s+\w+", e)):
             return True
-        return e.rsplit(".", 1)[-1] in _REAL_ARRAYS.get()
+        return e.rsplit(".", 1)[-1] in _schema().real_array_cols
 
     _arr_reject = [
         ("STRLEN", [0], "INT"), ("STRPOS", [0, 1], "INT"),
@@ -3685,9 +3690,9 @@ def _rewrite_druid_sql_masked(out: str, exact: bool, tz: str) -> str:
             _an = _am.group(1)
             if re.search(rf"(?i)(?<![\w.]){re.escape(_an)}\b",
                          out[_um.end():_ue]) and (
-                    _an in _ARRAY_ELEM.get() or _an in _MVD_COLS.get()
-                    or _an in _SCALAR_COLS.get()
-                    or _an in _JSON_COLS.get()):
+                    _an in _schema().array_elem or _an in _schema().mvd_cols
+                    or _an in _schema().scalar_cols
+                    or _an in _schema().json_cols):
                 return (f"SELECT CAST(RAISE_ERROR('Column ''{_an}'' "
                         f"is ambiguous') AS INT) AS __err")
 
@@ -3697,7 +3702,7 @@ def _rewrite_druid_sql_masked(out: str, exact: bool, tz: str) -> str:
     # same-named columns and rejects the outer reference as ambiguous
     # (qaSql sql_join.03/.04 A7 batteries). Expand the star with the
     # catalog's column list using the same suffix convention.
-    _tcols = _TABLE_COLS.get()
+    _tcols = _schema().table_columns
     if _tcols and re.search(r"(?is)\(\s*SELECT\s+\*\s+FROM", out):
         _kw = {"CROSS", "INNER", "LEFT", "RIGHT", "FULL", "JOIN",
                "ON", "WHERE", "GROUP", "ORDER", "LIMIT", "UNNEST"}
@@ -3771,7 +3776,7 @@ def _rewrite_druid_sql_masked(out: str, exact: bool, tz: str) -> str:
     # a NUMERIC probe into a VARIANT array is NULL in the reference
     # (the probe casts to the variant element type and misses —
     # qaArray ops_funcs_array_funcs C19: array_offset_of(a_mixed, 1))
-    _vars_ = _VARRAYS.get()
+    _vars_ = _schema().variant_array_cols
     if _vars_:
         def _variant_probe_null(fn):
             def b(a):
@@ -3794,7 +3799,7 @@ def _rewrite_druid_sql_masked(out: str, exact: bool, tz: str) -> str:
     # subqueries; string-element arrays are indistinguishable from
     # MVDs here (documented ambiguity) — so the guard covers only the
     # provably-real arrays
-    _in_arrays = set(_REAL_ARRAYS.get()) - set(_MVD_COLS.get())
+    _in_arrays = set(_schema().real_array_cols) - set(_schema().mvd_cols)
     if _in_arrays and re.search(r"(?i)\bIN\s*\(\s*SELECT\b", out):
         out = re.sub(
             r"(?is)(?<![\w.])([A-Za-z_]\w*)(\s+NOT)?\s+IN\s*"
@@ -3809,7 +3814,7 @@ def _rewrite_druid_sql_masked(out: str, exact: bool, tz: str) -> str:
     # reject (Calcite: COMPLEX<JSON> is not comparable). Variant-array
     # columns share the catalog hint store but ARE comparable
     # (Calcite array ordering) — exclude them.
-    _cjson = _JSON_COLS.get() - _REAL_ARRAYS.get()
+    _cjson = _schema().json_cols - _schema().real_array_cols
     if _cjson:
         _jc = "|".join(re.escape(c) for c in sorted(_cjson))
         _jpat = re.compile(
@@ -3823,7 +3828,7 @@ def _rewrite_druid_sql_masked(out: str, exact: bool, tz: str) -> str:
         # discovery-stored json TEXT ("JSON_TEXT" hint) stays
         # LIKE-able (qaJsonCols ingest_schmless I14-I17 pin
         # `c2 like '%b_str%'` as a working match)
-        _djson = _DECLARED_JSON.get() - _REAL_ARRAYS.get()
+        _djson = _schema().declared_json_cols - _schema().real_array_cols
         if _djson:
             _djc = "|".join(re.escape(c) for c in sorted(_djson))
             _djpat = re.compile(
@@ -3951,13 +3956,13 @@ def _rewrite_druid_sql_masked(out: str, exact: bool, tz: str) -> str:
         (ops_funcs_json_funcs C11/C12/C20/C21: the reference
         re-enters the nested machinery on the produced array)."""
         e = e.strip()
-        if e in _ARRAY_ELEM.get() or e in _VARRAYS.get():
+        if e in _schema().array_elem or e in _schema().variant_array_cols:
             return True
         return bool(re.match(r"(?is)^JSON_VALUE\s*\(", e)
                     and re.search(r"(?is)\bRETURNING\s+\w+\s+ARRAY"
                                   r"\s*\)\s*$", e))
 
-    if _ARRAY_ELEM.get() or _VARRAYS.get() or re.search(
+    if _schema().array_elem or _schema().variant_array_cols or re.search(
             r"(?is)\bRETURNING\s+\w+\s+ARRAY\b", out):
         # an ARRAY value is a single leaf for PATHS: '[$]' (the
         # reference's NestedPathFinder treats primitive arrays as
@@ -3970,9 +3975,9 @@ def _rewrite_druid_sql_masked(out: str, exact: bool, tz: str) -> str:
         def _str_elem_source(e: str) -> bool:
             # string-element sources keep JSON-quoted leaf renders
             e = e.strip()
-            if e in _VARRAYS.get():
+            if e in _schema().variant_array_cols:
                 return True
-            if _ARRAY_ELEM.get().get(e, "").split("(")[0] in (
+            if _schema().array_elem.get(e, "").split("(")[0] in (
                     "string", "varchar", "char"):
                 return True
             return bool(re.search(
@@ -4128,7 +4133,7 @@ def _rewrite_druid_sql_masked(out: str, exact: bool, tz: str) -> str:
             if not args or len(args) > 2:
                 return None
             a0 = args[0].strip()
-            if a0 in (_JSON_COLS.get() - _REAL_ARRAYS.get()):
+            if a0 in (_schema().json_cols - _schema().real_array_cols):
                 # no COMPLEX implementation in the reference's
                 # first/last aggregator — folds to NULL (qaSql
                 # aggr_general A21/A25); ARRAY inputs are legal and
@@ -4149,14 +4154,14 @@ def _rewrite_druid_sql_masked(out: str, exact: bool, tz: str) -> str:
     # (CalciteJoinQueryTest testJoinOnTimeseriesWithFloorOnTime pins
     # [a, b] vs a).
     def _any_value_call(a):
-        if len(a) == 1 and a[0].strip() in (_JSON_COLS.get()
-                                            - _REAL_ARRAYS.get()):
+        if len(a) == 1 and a[0].strip() in (_schema().json_cols
+                                            - _schema().real_array_cols):
             return "CAST(NULL AS STRING)"
         if len(a) == 3:
             expr = a[0].strip()
             keep_mv = a[2].strip().lower() != "false"
-            if not keep_mv and (expr in _MVD_COLS.get()
-                                or expr in _ARRAY_ELEM.get()):
+            if not keep_mv and (expr in _schema().mvd_cols
+                                or expr in _schema().array_elem):
                 return f"any_value(ELEMENT_AT({expr}, 1))"
             return f"any_value({a[0]})"
         # 2-arg reference form (expr, maxBytesPerValue) — the numeric
@@ -4235,7 +4240,7 @@ def _rewrite_druid_sql_masked(out: str, exact: bool, tz: str) -> str:
         is_num = re.fullmatch(r"[-+]?\d+(\.\d+)?", s)
         is_bool = re.fullmatch(r"(?i)TRUE|FALSE", s)
         a = arr.strip()
-        elems = _ARRAY_ELEM.get()
+        elems = _schema().array_elem
         et = elems.get(a, "").split("(")[0].lower()
         if not et:
             # json_value(... RETURNING t array) rewrites carry the
@@ -4261,7 +4266,7 @@ def _rewrite_druid_sql_masked(out: str, exact: bool, tz: str) -> str:
             # a numeric COLUMN joins a string array through its string
             # form too (Calcite leastRestrictive — qaUnnest
             # mv_sql_array_funcs array_prepend(c_long, 'Z') = [0, Z])
-            st = _SCALAR_TYPES.get().get(
+            st = _schema().scalar_types.get(
                 re.sub(r"^[A-Za-z_]\w*\.", "", s), "").split(
                 "(")[0].lower()
             if st and st not in ("string", "varchar", "char", "text"):
@@ -4311,7 +4316,7 @@ def _rewrite_druid_sql_masked(out: str, exact: bool, tz: str) -> str:
                  "APPROX_COUNT_DISTINCT_BUILTIN",
                  # plain Calcite spelling (AggregatorsModule HLL default)
                  "APPROX_COUNT_DISTINCT"):
-        if _HLLC_PARITY.get() and name in (
+        if _CTX.get().hllc_parity and name in (
                 "APPROX_COUNT_DISTINCT_BUILTIN", "APPROX_COUNT_DISTINCT"):
             # the EXPLICIT spellings are always approximate in the
             # reference — useApproximateCountDistinct governs only
@@ -4545,7 +4550,7 @@ def _rewrite_druid_sql_masked(out: str, exact: bool, tz: str) -> str:
     # GROUP BY c_mv_all_null_and_empty_val → one group per element,
     # null MVD → a null group). Typed ARRAY columns group by VALUE
     # and are untouched. Conservative: single bare-table FROM.
-    _mvds = _MVD_COLS.get()
+    _mvds = _schema().mvd_cols
     if _mvds and re.search(r"(?is)\bGROUP\s+BY\b", out):
         _kwm = _scan_top_kw(out, ["FROM", "WHERE", "GROUP BY",
                                   "HAVING", "ORDER BY", "LIMIT",
@@ -4671,8 +4676,8 @@ def _rewrite_druid_sql_masked(out: str, exact: bool, tz: str) -> str:
         for _m in list(re.finditer(
                 r"(?is)\bAS\s+(\w+)\s*\(\s*(\w+)\s*\)", out)):
             _ucol = _m.group(2)
-            if (_ucol in _SCALAR_COLS.get()
-                    or _ucol in _ARRAY_ELEM.get()) and \
+            if (_ucol in _schema().scalar_cols
+                    or _ucol in _schema().array_elem) and \
                     re.search(rf"(?i)\b{_ucol}0\b", out):
                 out = (out[:_m.start()]
                        + f"AS {_m.group(1)}({_ucol}0)" + out[_m.end():])
@@ -4727,7 +4732,7 @@ def _rewrite_druid_sql_masked(out: str, exact: bool, tz: str) -> str:
         r"(?i)\(SELECT EXPLODE(?:_OUTER)?\(.*?\) AS (\w+)\)", out))
     # known scalar table columns wrap too — minus any name the query
     # re-binds as an alias (it may name an array-valued expression)
-    ucols |= (_SCALAR_COLS.get()
+    ucols |= (_schema().scalar_cols
               - set(re.findall(r"(?i)\bAS\s+(\w+)", out)))
     # aliases DEFINED by a string-producing array render are scalar
     # strings in the enclosing scope, so the array family auto-wraps
@@ -4792,12 +4797,12 @@ def _rewrite_druid_sql_masked(out: str, exact: bool, tz: str) -> str:
                 c = args[0].strip()
                 if c not in ucols:
                     return None
-                st = _SCALAR_TYPES.get().get(c, "string").split(
+                st = _schema().scalar_types.get(c, "string").split(
                     "(")[0].lower()
                 # schema-discovered ("auto") numerics stringify like
                 # strings; only DECLARED numeric dims null out
                 stringy = (st in ("string", "varchar", "char", "text")
-                           or c in _AUTO_SCALARS.get())
+                           or c in _schema().auto_scalar_cols)
                 # '' has no MVD element form (empty strings normalize
                 # to null at the MVD layer — multi-value-dimensions
                 # docs; mv_sql_array_funcs A1_B15_C1 pins
@@ -4831,10 +4836,10 @@ def _rewrite_druid_sql_masked(out: str, exact: bool, tz: str) -> str:
             # JSON-text columns are stored as strings but serialize
             # as STRUCTURE through the generic UDF, not as quoted
             # values (to_json_string(a_nested) = the canonical text)
-            if c not in ucols or c in _JSON_COLS.get() \
-                    or c in _DECLARED_JSON.get():
+            if c not in ucols or c in _schema().json_cols \
+                    or c in _schema().declared_json_cols:
                 return None
-            st = _SCALAR_TYPES.get().get(c, "string").split(
+            st = _schema().scalar_types.get(c, "string").split(
                 "(")[0].lower()
             if st not in ("string", "varchar", "char", "text"):
                 return None
@@ -4865,7 +4870,7 @@ def _rewrite_druid_sql_masked(out: str, exact: bool, tz: str) -> str:
                         kinds.append("num")
                     else:
                         base = re.sub(r"^[A-Za-z_]\w*\.", "", x)
-                        t = _SCALAR_TYPES.get().get(base, "").split(
+                        t = _schema().scalar_types.get(base, "").split(
                             "(")[0].lower()
                         if not t and base in usrc:
                             # unnest element: type from its SOURCE
@@ -4873,7 +4878,7 @@ def _rewrite_druid_sql_masked(out: str, exact: bool, tz: str) -> str:
                             # string; typed arrays keep their
                             # numeric element type)
                             src = usrc[base].strip()
-                            et = _ARRAY_ELEM.get().get(
+                            et = _schema().array_elem.get(
                                 src, "").split("(")[0].lower()
                             if not et:
                                 jt = {w.lower() for w in re.findall(
@@ -4890,7 +4895,7 @@ def _rewrite_druid_sql_masked(out: str, exact: bool, tz: str) -> str:
                             if not et and any(
                                     re.search(rf"(?<![\w.])"
                                               rf"{re.escape(mc)}\b", src)
-                                    for mc in _MVD_COLS.get()):
+                                    for mc in _schema().mvd_cols):
                                 et = "string"
                             t = et
                         elif not t and base in ucols:
@@ -5309,15 +5314,15 @@ def _rewrite_druid_sql_masked(out: str, exact: bool, tz: str) -> str:
             # variant round-trip re-parses the stored text. Placeholder
             # name: the PARSE_JSON text-render pass must not re-wrap
             # this internal variant (resolved at end of rewrite).
-            if ((v.strip() in _JSON_COLS.get()
-                    # variant ARRAY columns share the _JSON_COLS hint
+            if ((v.strip() in _schema().json_cols
+                    # variant ARRAY columns share the json_cols hint
                     # store but are REAL arrays — they embed natively
                     # as JSON arrays, not via text re-parse (qaArray
                     # ops_funcs_json_funcs json_object(KEY 'k' VALUE
                     # a_mixed) = {"k":["true","1",...]})
-                    and v.strip() not in _VARRAYS.get()
-                    and v.strip() not in _REAL_ARRAYS.get()
-                    and v.strip() not in _ARRAY_ELEM.get())
+                    and v.strip() not in _schema().variant_array_cols
+                    and v.strip() not in _schema().real_array_cols
+                    and v.strip() not in _schema().array_elem)
                     or re.match(r"(?is)^(JSON_QUERY|PARSE_JSON|"
                                 r"TRY_PARSE_JSON|TO_JSON_STRING)\s*\("
                                 r".*\)$", v.strip())):
@@ -5366,7 +5371,7 @@ def _rewrite_druid_sql_masked(out: str, exact: bool, tz: str) -> str:
                 # EXPRESSIONS (A016 'a'||'b') stay legal via MAP
                 _k = kv[0].strip()
                 _kbase = re.sub(r"^[A-Za-z_]\w*\.", "", _k).lower()
-                _ktype = _SCALAR_TYPES.get().get(
+                _ktype = _schema().scalar_types.get(
                     _kbase, "").split("(")[0].lower()
                 _nonstr = (
                     re.fullmatch(r"(?is)(?:[\d.+\-*/%()\s]+|TRUE|"
@@ -5376,7 +5381,7 @@ def _rewrite_druid_sql_masked(out: str, exact: bool, tz: str) -> str:
                     or (_ktype and _ktype not in
                         ("varchar", "string", "char", "text"))
                     or _kbase in {c.lower()
-                                  for c in _JSON_COLS.get()}
+                                  for c in _schema().json_cols}
                     or re.fullmatch(r"(?is)\([^']*(?:=|<|>)[^']*\)",
                                     _k))
                 if _nonstr:
@@ -5613,7 +5618,7 @@ def _rewrite_druid_sql_masked(out: str, exact: bool, tz: str) -> str:
         if not _tm:
             continue
         _ucol = _tm.group(2)
-        et = _ARRAY_ELEM.get().get(_uexpr, "").split("(")[0]
+        et = _schema().array_elem.get(_uexpr, "").split("(")[0]
         _uexpr_u = ctx.unmask(_uexpr) if ctx else _uexpr
         if (et in _num_t
                 or re.search(r"(?i)'array<(bigint|int|double|float)>'",
@@ -5635,7 +5640,7 @@ def _rewrite_druid_sql_masked(out: str, exact: bool, tz: str) -> str:
             if not a:
                 return None
             x = a[0].strip()
-            t = _SCALAR_TYPES.get().get(x, "")
+            t = _schema().scalar_types.get(x, "")
             if x in _num_ucols and not t:
                 t = "BIGINT"
             elif t and x.lower() in _alias_defs:
@@ -5646,7 +5651,7 @@ def _rewrite_druid_sql_masked(out: str, exact: bool, tz: str) -> str:
             return None
         return b
 
-    if _SCALAR_TYPES.get() or _num_ucols:
+    if _schema().scalar_types or _num_ucols:
         for _tfn, _trt in _tf_types.items():
             out = _rewrite_call(out, _tfn, _time_numeric_guard(_tfn, _trt))
 
@@ -5655,7 +5660,7 @@ def _rewrite_druid_sql_masked(out: str, exact: bool, tz: str) -> str:
     # over unnested bigints yields 0/1/1/2); Spark's `/` always
     # promotes to double. Rewrite only when BOTH sides are provably
     # long: a long-typed scalar column or a numeric-unnest alias.
-    _longs = {c for c, t in _SCALAR_TYPES.get().items()
+    _longs = {c for c, t in _schema().scalar_types.items()
               if t.split("(")[0].lower() in ("bigint", "long", "int",
                                              "integer", "smallint",
                                              "tinyint")} | _long_ucols
@@ -5707,7 +5712,7 @@ def _rewrite_druid_sql_masked(out: str, exact: bool, tz: str) -> str:
         out = _rewrite_call(out, "GROUPING", lambda a: "0" if a else None)
     # Calcite's niladic PI (SELECT pi) — Spark requires the call form;
     # only when no column of that name exists
-    if ("pi" not in _SCALAR_COLS.get()
+    if ("pi" not in _schema().scalar_cols
             and re.search(r"(?i)(?<![\w.$'])pi(?![\w(])", out)):
         masked_pi, lits_pi = _mask_local(out)
 

@@ -141,6 +141,7 @@ class KinesisStreamReader(DataSourceStreamReader):
         self.bound_lag_ms = int(lag)
         self.grace_ms = int(options.get("disordergracems", 15000))
         self._client = None
+        self._last_bound = -1
 
     def _cli(self):
         from druid_spark.streaming.kinesis import KinesisClient
@@ -153,7 +154,17 @@ class KinesisStreamReader(DataSourceStreamReader):
                       for s in self._cli().list_shards(self.stream))
 
     def _now_bound_ms(self) -> int:
-        return int(time.time() * 1000) - self.bound_lag_ms
+        # Two bounds taken within one millisecond would be equal and
+        # plan an empty batch, so wait out the millisecond: each bound
+        # is strictly past the previous one, and never ahead of
+        # now - boundlagms (with lag 0, a bound ahead of the clock
+        # would skip records that arrive later in that millisecond)
+        bound = int(time.time() * 1000) - self.bound_lag_ms
+        while bound <= self._last_bound:
+            time.sleep((self._last_bound + 1 - bound) / 1000)
+            bound = int(time.time() * 1000) - self.bound_lag_ms
+        self._last_bound = bound
+        return bound
 
     # offsets: JSON dict {"t": epoch_ms} — the committed batch bound
     def initialOffset(self) -> dict:

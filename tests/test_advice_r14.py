@@ -10,7 +10,9 @@
 - minhash_lsh_pairs: tab/newline-only docs (which slip past the
   space-only trim) neither error nor change the pair list.
 - _ordered_pairs: the large-input range-sort branch returns the same
-  collected order as the single-partition branch.
+  collected order as the single-partition branch, and an input of
+  unknown size (remote storage) takes that branch.
+- _persist_scoped: concurrent first calls leave one pinned frame.
 """
 
 from __future__ import annotations
@@ -121,3 +123,66 @@ def test_persist_scoped_drops_previous_different_plan(spark):
     assert not pa.storageLevel.useMemory
     assert pb.storageLevel.useMemory
     pb.unpersist()
+
+
+def test_persist_scoped_concurrent_first_calls_pin_one_frame(
+        spark, monkeypatch):
+    """Two first calls racing (the prewarm thread against a threaded
+    server request) must leave exactly one frame cached: without the
+    registry lock both read "no previous frame" and both stay pinned.
+    persist() is slowed so the two calls overlap."""
+    import threading
+    import time
+
+    from pyspark.sql import DataFrame
+
+    orig = DataFrame.persist
+
+    def slow_persist(self, *a, **kw):
+        time.sleep(0.2)
+        return orig(self, *a, **kw)
+
+    monkeypatch.setattr(DataFrame, "persist", slow_persist)
+    frames = [spark.range(n).select(F.col("id").alias("x"))
+              for n in (30, 40)]
+    out = [None, None]
+    start = threading.Barrier(2)
+
+    def call(i):
+        start.wait()
+        out[i] = dedup._persist_scoped(frames[i], "t_r14_race")
+
+    threads = [threading.Thread(target=call, args=(i,)) for i in (0, 1)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    cached = [cache.lookupCachedData(f._jdf).isDefined() for f in out]
+    assert sorted(cached) == [False, True]
+    for f in out:
+        f.unpersist()
+
+
+def test_ordered_pairs_remote_input_takes_distributed_branch(
+        spark, monkeypatch):
+    """An input on remote storage (not a file: URI) has no local size
+    to read; it must take the distributed range sort, not the
+    single-partition tail. In-memory input (no files) keeps the tail."""
+    df = spark.createDataFrame([(3, 5), (1, 2)], "id_a long, id_b long")
+    checkpoints = []
+    orig = type(df).localCheckpoint
+
+    def spy(self, *a, **kw):
+        checkpoints.append(self)
+        return orig(self, *a, **kw)
+
+    monkeypatch.setattr(type(df), "localCheckpoint", spy)
+    dedup._ordered_pairs(df, "id_a", "id_b")
+    assert checkpoints == []
+    monkeypatch.setattr(type(df), "inputFiles",
+                        lambda self: ["s3a://bucket/docs/part-0.parquet"])
+    assert dedup._input_bytes(df) > dedup._ORDERED_PAIRS_INPUT_MAX_BYTES
+    got = dedup._ordered_pairs(df, "id_a", "id_b").collect()
+    assert len(checkpoints) == 1
+    assert [tuple(r) for r in got] == [(1, 2), (3, 5)]

@@ -4,16 +4,18 @@ floor inflated ~1.6x while the signed-drift sentinel self-certified
 the record clean), while keeping the two r12-era trips (end-slower
 drift, pre-start loadavg) and the benign JIT-warm-up case intact.
 
-Pure-python: imports bench for host_noise_verdict only (no Spark)."""
+Pure-python: imports bench for host_noise_verdict and
+load_sentinel_floors only (no Spark)."""
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import host_noise_verdict
+from bench import host_noise_verdict, load_sentinel_floors
 
 
 def test_quiet_host_with_jit_warmup_is_benign():
@@ -89,3 +91,25 @@ def test_local_floor_wins_when_faster_and_seed_caps_polluted_local():
     # core counts without a seed pass through unchanged
     assert merged_sentinel_floors({"8": 0.033}, {"32": 0.0414}) == {
         "8": 0.033, "32": 0.0414}
+
+
+def test_sentinel_floors_load_reports_unreadable_seed(tmp_path):
+    out = tmp_path / "bench_out.json"
+    seed = tmp_path / "bench_sentinel_floors.json"
+    # no history and no seed: empty floors, nothing to report
+    assert load_sentinel_floors(str(out), str(seed)) == ({}, None)
+    out.write_text(json.dumps(
+        {"host_noise": {"sentinel_floor_sec": {"32": 0.05, "8": 0.2}}}))
+    seed.write_text(json.dumps({"32": 0.04}))
+    assert load_sentinel_floors(str(out), str(seed)) == (
+        {"32": 0.04, "8": 0.2}, None)
+    # a seed that exists but cannot be loaded: the local floors stand
+    # and the error names the file
+    seed.write_text("{not json")
+    floors, error = load_sentinel_floors(str(out), str(seed))
+    assert floors == {"32": 0.05, "8": 0.2}
+    assert error.startswith(f"cannot load {seed}:")
+    # a corrupt bench_out.json only means no local history
+    out.write_text("garbage")
+    seed.write_text(json.dumps({"32": 0.04}))
+    assert load_sentinel_floors(str(out), str(seed)) == ({"32": 0.04}, None)

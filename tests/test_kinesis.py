@@ -252,6 +252,41 @@ def test_driver_plans_batches_without_reading_records(kinesis):
     assert kinesis.get_records_record_bytes == 0
 
 
+def test_batch_bounds_strictly_advance_within_one_millisecond(
+        monkeypatch):
+    """latestOffset is the (lagged) wall clock in ms. On a clock that
+    stays on one millisecond until the reader sleeps, consecutive
+    bounds must still strictly advance (an equal pair plans an empty
+    batch), and no bound may run ahead of now - boundlagms."""
+    from druid_spark.streaming import kinesis_source
+    from druid_spark.streaming.kinesis_source import KinesisStreamReader
+
+    class Clock:
+        ms = 1_700_000_000_000
+        sleeps = 0
+
+        def time(self):
+            return self.ms / 1000
+
+        def sleep(self, s):
+            assert s > 0
+            self.sleeps += 1
+            self.ms += 1
+
+    clock = Clock()
+    monkeypatch.setattr(kinesis_source, "time", clock)
+    for lag in (0, 250):
+        rdr = KinesisStreamReader({"endpoint": "http://127.0.0.1:1",
+                                   "stream": "s",
+                                   "boundlagms": str(lag)})
+        bounds = [rdr.initialOffset()["t"]]
+        for _ in range(5):
+            bounds.append(rdr.latestOffset()["t"])
+            assert bounds[-1] <= clock.ms - lag
+        assert all(a < b for a, b in zip(bounds, bounds[1:]))
+    assert clock.sleeps == 10
+
+
 def test_out_of_order_arrival_timestamps_near_bound_lose_nothing():
     """AWS documents ApproximateArrivalTimestamp as approximate only:
     per-shard timestamps need not be monotone. Inject backdated

@@ -705,3 +705,53 @@ def test_sql_current_timestamp_pinned(spark):
           AND __time < TIMESTAMP '2024-01-15 00:00:00'""") \
         .collect()[0]["n"]
     assert row["n"] == exact and exact > 0
+
+
+def test_sql_schema_follows_catalog_version(spark):
+    """The rewrite's schema hints are cached per catalog version:
+    re-registering a table that turns a scalar column into an array
+    bumps the version, and the very next statement sees the new kind
+    (here the array-family scalar auto-wrap, which must stop wrapping
+    a column that is now an array)."""
+    from druid_spark import DruidSparkEngine
+    e = DruidSparkEngine(spark)
+    e.catalog.register_table(
+        "t_schema_kind", spark.createDataFrame([("a",)], "c string"))
+    q = "SELECT ARRAY_LENGTH(c) AS n FROM t_schema_kind"
+    assert e.sql(q).collect()[0]["n"] == 1
+    e.catalog.register_table(
+        "t_schema_kind",
+        spark.createDataFrame([(["a", "b", "c"],)], "c array<string>"))
+    assert e.sql(q).collect()[0]["n"] == 3
+    # only the current version's entries are kept
+    assert e._sql_schemas[0] == e.catalog.version
+
+
+def test_rewrite_schema_is_thread_isolated():
+    """Concurrent rewrites each see only the SqlSchema they passed:
+    one thread's column is a scalar (auto-wrapped), the other's an
+    array (left alone)."""
+    import threading
+
+    from druid_spark.functions.sqlshim import SqlSchema, rewrite_druid_sql
+    q = "SELECT ARRAY_LENGTH(c) AS n, ARRAY_TO_STRING(c, ',') AS s FROM t"
+    schemas = {"scalar": SqlSchema(scalar_cols=frozenset({"c"}),
+                                   scalar_types={"c": "string"}),
+               "array": SqlSchema(array_elem={"c": "string"})}
+    serial = {k: rewrite_druid_sql(q, schema=s) for k, s in schemas.items()}
+    assert serial["scalar"] != serial["array"]
+    got: dict[str, list[str]] = {k: [] for k in schemas}
+    start = threading.Barrier(len(schemas))
+
+    def run(kind):
+        start.wait()
+        for _ in range(200):
+            got[kind].append(rewrite_druid_sql(q, schema=schemas[kind]))
+
+    threads = [threading.Thread(target=run, args=(k,)) for k in schemas]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for kind, outs in got.items():
+        assert outs == [serial[kind]] * 200
